@@ -105,11 +105,13 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       // local-mode knob: the sf0.1 parquet files are single small splits,
       // which would serialize CPU-bound per-row operators (hashing,
-      // signatures) onto one core. Splitting at 16 KiB spreads even the
-      // ~600 KB documents file over all local cores (the tokenize/shingle
-      // explodes amplify each split's work far beyond its bytes); at real
-      // scale inputs arrive as thousands of splits and these two settings
-      // are left at their defaults.
+      // signatures) onto one core. Splitting at 16 KiB plans one split per
+      // local core for the ~600 KB documents file, but a parquet split
+      // holds whole row groups and the file is ONE row group, so all its
+      // rows still land in one split; Tables.documents redistributes such
+      // a scan to the planned split count. At real scale inputs arrive as
+      // thousands of splits and these two settings are left at their
+      // defaults.
       .config("spark.sql.files.openCostInBytes", "16384")
       .config("spark.sql.files.minPartitionNum", cpus)
       // the whole-stage-codegen class cache is JVM-GLOBAL and defaults to

@@ -15,7 +15,9 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: split the small local parquet files across cores.
+      // see Bench.scala: plan one split per core for the small local
+      // parquet files (a single-row-group file still reads as one split;
+      // Tables.documents redistributes that scan).
       .config("spark.sql.files.openCostInBytes", "16384")
       .config("spark.sql.files.minPartitionNum", cpus)
       .config("spark.ui.enabled", "false")

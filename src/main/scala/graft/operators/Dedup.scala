@@ -20,8 +20,13 @@ import graft.functions.{text => T, vectors => V}
  * cross join, so cost is Σ bucket², not n². Buckets above `maxBucket` are
  * dropped before pair generation (boilerplate-document skew guard): one
  * viral template must not create a quadratic hot bucket. No stage persists
- * anything: the self-joins are on identical subplans, which Spark collapses
- * into a single shuffle via ReuseExchange, so there is no cache to leak.
+ * anything, so there is no cache to leak. The MinHash path references
+ * each subtree once (one grouped pass per bucket, one broadcast pair list
+ * per candidate doc), so its cost holds whether or not Spark reuses an
+ * exchange: adaptive execution never reuses one above a cached input,
+ * whose every reference becomes its own TableCacheQueryStage. The simhash
+ * block join, [[containmentPairs]] and [[minhashRecallAudit]] still
+ * self-join and depend on that reuse.
  */
 object Dedup {
 
@@ -123,85 +128,67 @@ object Dedup {
     sl.groupBy("id", carry: _*).agg(mins.head, mins.tail: _*)
   }
 
-  /**
-   * LSH candidate pairs over (id, normalized-text): [[shingleTable]] →
-   * k 32-bit min-hash slices as k MIN aggregates (partial-aggregated
-   * map-side over the shuffle-free shingle build, so the one exchange
-   * carries only per-doc minima) →
-   * `bands` band keys → skew-capped self-join on (band, band-hash).
-   * Returns distinct (id1, id2) with id1 < id2 — the shared candidate
-   * generator for the MinHash and n-gram-Jaccard verifiers.
-   */
-  /** Per-doc band-key table with its bucket population: (id, extra...,
-    * b, bh, n_bucket). Shared by the capped candidate join and the
-    * dropped-bucket audit so the two always agree on the population. */
-  private def bandBuckets(sig: DataFrame, k: Int, bands: Int,
-      extra: Seq[String], tagCol: Option[String] = None): DataFrame = {
+  /** Per-doc band keys: (id, extra..., b, bh), one row per (doc, band).
+    * Shared by the candidate generator and the dropped-bucket audit so the
+    * two always agree on a bucket's population. */
+  private def bandKeys(sig: DataFrame, k: Int, bands: Int, extra: Seq[String]): DataFrame = {
     val rowsPerBand = k / bands
-    val bandKeys = (0 until bands).map(b =>
+    val keys = (0 until bands).map(b =>
       md5(concat_ws("#",
         (0 until rowsPerBand).map(r => sliceHex(col(s"m${b * rowsPerBand + r}"))): _*)))
-    val bandsDf = sig.select(col("id") +: extra.map(col) :+
-      posexplode(array(bandKeys: _*)).as(Seq("b", "bh")): _*)
-    // Skew guard: drop over-popular buckets before the self-join. The
-    // window partitions exactly like the join keys, so the count and the
-    // join share one shuffle (and the two join sides share it again via
-    // ReuseExchange). EXPLICIT partition count on that shuffle: the band
-    // table's bytes are small, so AQE would coalesce it to one partition —
-    // and the O(sum bucket^2) pair generation sitting ABOVE the exchange
-    // would run single-threaded (measured: a 1.5-2 s one-task stage at
-    // sf0.1; explicit counts are exempt from coalescing).
-    // With a tag, the per-side population rides the SAME projection —
-    // two window expressions in one select collapse to ONE Window pass
-    // (a later withColumn would plan a second WindowExec: the Project
-    // between the two Window nodes defeats CollapseWindow — measured
-    // +35% on l10).
-    val wB = Window.partitionBy("b", "bh")
-    val counts = count(lit(1)).over(wB).as("n_bucket") +: tagCol.toSeq.map(t =>
-      sum(when(col(t), 1L).otherwise(0L)).over(wB).as("__n_inc"))
-    bandsDf
-      .repartition(graft.config.Knobs.amplifiedShufflePartitions(sig.sparkSession),
-        col("b"), col("bh"))
-      .select(col("*") +: counts: _*)
+    sig.select(col("id") +: extra.map(col) :+ posexplode(array(keys: _*)).as(Seq("b", "bh")): _*)
   }
 
-  /** Skew-capped self-join of per-doc band keys → distinct (id1, id2)
-    * candidate pairs. `sig` must carry columns m0..m{k-1}. With `tagCol`
-    * set (a BOOLEAN column riding on `sig`), the tag becomes part of the
-    * join condition — `a.tag =!= b.tag` — so SAME-TAG pairs are rejected
-    * inside the join and never materialize as output rows; the output
-    * then also carries (tag1, tag2).
+  /** Skew-capped LSH candidates from per-doc band keys → distinct
+    * (id1, id2) pairs, id1 < id2. `sig` must carry columns m0..m{k-1}.
     *
-    * The skew cap is PER SIDE on tagged runs: each tag's bucket
-    * population is a windowed conditional sum over the SAME (b, bh)
-    * exchange the join uses, and a bucket is dropped only when one
-    * side's own population exceeds `maxBucket`. Cross-pair work per
-    * bucket is n_inc·n_ref ≤ maxBucket² — the same quadratic bound as
-    * the union cap — but a pathologically self-duplicated batch can no
-    * longer push a MIXED bucket over the cap and evict its true cross
-    * pairs: eviction now requires one SIDE to be oversized by itself.
-    * Untagged runs keep the union-population cap (the l1/l3 oracle
-    * contract, unchanged). */
+    * ONE grouped pass: each (b, bh) bucket's id list is collected on an
+    * exchange with an EXPLICIT partition count (the band table's bytes
+    * are small, so AQE would coalesce it to one task and run the
+    * O(Σ bucket²) pair emission above it single-threaded — measured as a
+    * 1.5-2 s one-task stage at sf0.1; explicit counts are exempt from
+    * coalescing), buckets over the cap are dropped, and the pairs inside
+    * each surviving bucket are emitted from its list. The signature table
+    * is referenced once, so the cost holds over a cached input too (see
+    * the object doc on exchange reuse).
+    *
+    * With `tagCol` set (a BOOLEAN column riding on `sig`), each bucket
+    * keeps one list per side and emits only CROSS pairs (n_inc·n_ref of
+    * them), so same-tag pairs never materialize; the output then also
+    * carries (tag1, tag2), the tags of id1 and id2. The skew cap is PER
+    * SIDE on tagged runs: a bucket is dropped only when one side's own
+    * population exceeds `maxBucket`. Cross-pair work per bucket stays
+    * ≤ maxBucket² — the same quadratic bound as the union cap — but a
+    * pathologically self-duplicated batch can no longer push a MIXED
+    * bucket over the cap and evict its true cross pairs. Untagged runs
+    * keep the union-population cap (the l1/l3 oracle contract). */
   private def candidatesFromSig(sig: DataFrame, k: Int, bands: Int,
       maxBucket: Int, tagCol: Option[String] = None): DataFrame = {
-    val tags = tagCol.toSeq
-    val cap = tagCol match {
-      case Some(_) => col("__n_inc") <= maxBucket &&
-        col("n_bucket") - col("__n_inc") <= maxBucket
-      case None => col("n_bucket") <= maxBucket
+    val keyed = bandKeys(sig, k, bands, tagCol.toSeq)
+      .repartition(graft.config.Knobs.amplifiedShufflePartitions(sig.sparkSession),
+        col("b"), col("bh"))
+      .groupBy("b", "bh")
+    val pairs = tagCol match {
+      case None =>
+        val ids = col("ids")
+        keyed.agg(sort_array(collect_list(col("id"))).as("ids"))
+          .filter(size(ids) >= 2 && size(ids) <= maxBucket)
+          .select(explode(flatten(transform(sequence(lit(1), size(ids) - 1), i =>
+            transform(slice(ids, i + 1, size(ids) - i), y =>
+              struct(element_at(ids, i).as("id1"), y.as("id2")))))).as("p"))
+      case Some(t) =>
+        val (inc, ref) = (col("inc"), col("ref"))
+        // collect_list skips the nulls `when` leaves for the other side
+        keyed.agg(collect_list(when(col(t), col("id"))).as("inc"),
+            collect_list(when(!col(t), col("id"))).as("ref"))
+          .filter(size(inc) >= 1 && size(ref) >= 1 &&
+            size(inc) <= maxBucket && size(ref) <= maxBucket)
+          .select(explode(flatten(transform(inc, x =>
+            transform(filter(ref, y => y =!= x), y =>
+              struct(least(x, y).as("id1"), greatest(x, y).as("id2"),
+                (x < y).as("tag1"), (x > y).as("tag2")))))).as("p"))
     }
-    val capped = bandBuckets(sig, k, bands, tags, tagCol).filter(cap)
-      .select("id", tags ++ Seq("b", "bh"): _*)
-    val baseCond = col("a.b") === col("b.b") && col("a.bh") === col("b.bh") &&
-      col("a.id") < col("b.id")
-    val cond = tagCol.map(t => baseCond && col(s"a.$t") =!= col(s"b.$t"))
-      .getOrElse(baseCond)
-    capped.as("a")
-      .join(capped.as("b"), cond)
-      .select(Seq(col("a.id").as("id1"), col("b.id").as("id2")) ++
-        tagCol.toSeq.flatMap(t =>
-          Seq(col(s"a.$t").as("tag1"), col(s"b.$t").as("tag2"))): _*)
-      .distinct()
+    pairs.select("p.*").distinct()
   }
 
   /** The long slice back to the exact 8-hex lowercase form the md5-hex
@@ -224,61 +211,64 @@ object Dedup {
    * Attach a per-document feature (a shingle/gram set, typically) to BOTH
    * sides of a candidate pair list — the verification join every near-dup
    * pipeline ends with, shaped so its cost is sized to CANDIDATES, never
-   * to the corpus:
-   *  - features are computed only for documents that appear in some
-   *    candidate pair: the candidate-id set is BROADCAST into a semi-join
-   *    that cuts the corpus first. (Broadcast explicitly: Catalyst can't
-   *    size the id set statically — it sits above aggregates — and plans
-   *    a sort-merge semi-join, which exchanges the WHOLE corpus by id
-   *    before AQE can flip the join; at 100 TB that is a full corpus
-   *    shuffle for nothing. The id set is 8 bytes per candidate doc; if a
-   *    dup rate ever makes that too big to broadcast, the scale path is a
-   *    broadcast BLOOM of the ids filtering the corpus map-side, then a
-   *    shuffle of survivors only.)
-   *  - the feature table is referenced ONCE: pairs explode to (pair,
-   *    member-id) rows and one shuffled join attaches each member's
-   *    feature, then a groupBy(pair) re-assembles the two sides. (The
-   *    obvious alternative — joining the feature table once per pair
-   *    side — plans each reference as its own subtree after column
-   *    pruning, so the whole feature computation runs once per side as
-   *    concurrent duplicate jobs; measured 5 s → 10-140 s swings at
-   *    sf0.1.) shuffle_hash keeps AQE from broadcasting the feature side
-   *    whose Generate-amplified size the planner cannot estimate.
-   *  - both post-semi-join exchanges carry EXPLICIT partition counts:
-   *    their BYTES are small, so AQE's byte-based coalescing would run
-   *    the CPU-heavy feature build and the per-pair set intersection
-   *    above them in one task (measured 1.3-2 s single-task stages;
-   *    explicit counts are exempt from coalescing).
+   * to the corpus, and so that `cand` and the corpus are each referenced
+   * once:
+   *  - `cand` folds into one pair list per candidate doc
+   *    (id → [(id1, id2, carryPair...)]), BROADCAST into an inner join
+   *    that cuts the corpus to candidate docs. (Broadcast explicitly:
+   *    Catalyst can't size the list statically — it sits above
+   *    aggregates — and plans a sort-merge join, which exchanges the
+   *    WHOLE corpus by id before AQE can flip the join; at 100 TB that is
+   *    a full corpus shuffle for nothing. The list is two entries per
+   *    pair; if a dup rate ever makes that too big to broadcast, the
+   *    scale path is a broadcast BLOOM of the ids filtering the corpus
+   *    map-side, then a shuffled join of survivors only.)
+   *  - the list rides through the feature build on each doc's row, then
+   *    explodes to one (pair, member, feature) row per pair side and a
+   *    groupBy(pair) re-assembles the two sides. No second reference to
+   *    `cand` or to the feature table exists: over a cached input each
+   *    reference would rerun the whole candidate build (see the object
+   *    doc on exchange reuse).
+   *  - both post-cut exchanges carry EXPLICIT partition counts: their
+   *    BYTES are small, so AQE's byte-based coalescing would run the
+   *    CPU-heavy feature build and the per-pair set intersection above
+   *    them in one task (measured 1.3-2 s single-task stages; explicit
+   *    counts are exempt from coalescing).
    *
-   * `features` maps the (id, t) candidate-doc subset to (id, one feature
-   * column); returns (id1, id2, carryPair..., f1, f2). `carryPair`
-   * columns are pair-level payload on `cand` (must be functions of
-   * (id1, id2) — e.g. which side of a cross pair is the incoming doc)
-   * that ride through to the output so callers need no re-join to
-   * recover them.
+   * `features` receives the candidate-doc frame (id, t, _prs) and returns
+   * it with ONE feature column added; `id` and `_prs` must pass through
+   * (a row-level projection such as `withColumn` does so by construction).
+   * Returns (id1, id2, carryPair..., f1, f2). `carryPair` columns are
+   * pair-level payload on `cand` (must be functions of (id1, id2) — e.g.
+   * which side of a cross pair is the incoming doc) that ride through to
+   * the output so callers need no re-join to recover them.
    */
   private def pairSides(cand: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, carryPair: Seq[String] = Nil)(
       features: DataFrame => DataFrame): DataFrame = {
     val parts = graft.config.Knobs.amplifiedShufflePartitions(corpus.sparkSession)
-    val candIds = cand.select(explode(array(col("id1"), col("id2"))).as("cid")).distinct()
+    val pairKey = (Seq("id1", "id2") ++ carryPair).map(col)
+    val lists = cand
+      .select(explode(array(col("id1"), col("id2"))).as("cid"), struct(pairKey: _*).as("pr"))
+      .groupBy("cid").agg(collect_list(col("pr")).as("_prs"))
     val candCorpus = corpus.select(col(idCol).as("id"), col(textCol).as("t"))
-      .join(broadcast(candIds), col("id") === col("cid"), "left_semi")
+      .join(broadcast(lists), col("id") === col("cid"))
+      .select("id", "t", "_prs")
       .repartition(parts, col("id"))
     val feats = features(candCorpus)
-    val fCol = feats.columns.filter(_ != "id") match {
-      case Array(f) => f
-      case other => throw new IllegalArgumentException(
-        s"features must return (id, <one feature column>), got ${other.mkString(",")}")
+    val fCol = feats.columns.filterNot(Set("id", "t", "_prs")) match {
+      case Array(f) if Set("id", "_prs").subsetOf(feats.columns.toSet) => f
+      case _ => throw new IllegalArgumentException(
+        "features must return (id, _prs, <one feature column>), got " +
+          feats.columns.mkString(","))
     }
-    val members = cand.select(Seq(col("id1"), col("id2")) ++ carryPair.map(col) :+
-      explode(array(col("id1"), col("id2"))).as("id"): _*)
-    members.join(feats.hint("shuffle_hash"), "id")
+    feats.select(col("id"), col(fCol).as("f"), explode(col("_prs")).as("pr"))
+      .select(col("pr.*"), col("id"), col("f"))
       .repartition(parts, col("id1"), col("id2"))
-      .groupBy((Seq("id1", "id2") ++ carryPair).map(col): _*)
+      .groupBy(pairKey: _*)
       .agg(
-        first(when(col("id") === col("id1"), col(fCol)), ignoreNulls = true).as("f1"),
-        first(when(col("id") === col("id2"), col(fCol)), ignoreNulls = true).as("f2"))
+        first(when(col("id") === col("id1"), col("f")), ignoreNulls = true).as("f1"),
+        first(when(col("id") === col("id2"), col("f")), ignoreNulls = true).as("f2"))
   }
 
   /** [[pairSides]] for callers outside the operator (the catalog's l3
@@ -287,13 +277,21 @@ object Dedup {
       textCol: String)(features: DataFrame => DataFrame): DataFrame =
     pairSides(cand, corpus, idCol, textCol)(features)
 
-  /** The per-doc distinct shingle-hash-set feature [[minhashPairs]]
+  /** The per-doc distinct shingle-hash set (`hset`) [[minhashPairs]]
     * verifies with, exposed for threshold-sweep composition (catalog
-    * l23): expects the (id, t) frame [[verifyPairSides]] hands its
-    * callback, returns (id, hset). */
-  def shingleHashSetFeature(cc: DataFrame, shingleN: Int): DataFrame =
-    shingleTable(cc, "id", "t", shingleN)
-      .groupBy("id").agg(collect_set(md5(col("s"))).as("hset"))
+    * l23): adds `hset` to the (id, t, ...) frame [[verifyPairSides]]
+    * hands its callback. A row-level projection over the projected word
+    * array (materialized once per row, so the shingle lambda does not
+    * re-split the text per shingle); null for docs shorter than
+    * `shingleN` words, which have no shingles. */
+  def shingleHashSetFeature(cc: DataFrame, shingleN: Int): DataFrame = {
+    val ws = col("_ws")
+    cc.withColumn("_ws", split(col("t"), " "))
+      .withColumn("hset", when(size(ws) >= shingleN, array_distinct(
+        transform(sequence(lit(1), size(ws) - (shingleN - 1)),
+          i => md5(array_join(slice(ws, i, lit(shingleN)), " "))))))
+      .drop("_ws")
+  }
 
   /**
    * MinHash + LSH near-duplicate pairs: candidates as in [[lshCandidates]],
@@ -310,10 +308,7 @@ object Dedup {
       k, bands, maxBucket)
     // one md5 (32 hex) alone identifies the shingle — the verification
     // sets need only an injective shingle id, not the k-slice signature
-    pairSides(cand, corpus, idCol, textCol) { cc =>
-      shingleTable(cc, "id", "t", shingleN)
-        .groupBy("id").agg(collect_set(md5(col("s"))).as("hset"))
-    }
+    pairSides(cand, corpus, idCol, textCol)(shingleHashSetFeature(_, shingleN))
       .select(col("id1"), col("id2"), T.jaccard(col("f1"), col("f2")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
@@ -462,10 +457,8 @@ object Dedup {
       .select(col("id1"), col("id2"),
         when(col("tag1"), col("id1")).otherwise(col("id2")).as("_incid"))
     val union = taggedUnion(incoming, reference, idCol, textCol)
-    val verified = pairSides(cross, union, idCol, textCol, carryPair = Seq("_incid")) { cc =>
-      shingleTable(cc, "id", "t", shingleN)
-        .groupBy("id").agg(collect_set(md5(col("s"))).as("hset"))
-    }
+    val verified = pairSides(cross, union, idCol, textCol, carryPair = Seq("_incid"))(
+      shingleHashSetFeature(_, shingleN))
       .filter(T.jaccard(col("f1"), col("f2")) >= threshold)
     val dropIds = verified.select(col("_incid").as("_did")).distinct()
     incoming.join(dropIds, col(idCol) === col("_did"), "left_anti")
@@ -479,8 +472,9 @@ object Dedup {
 
   /** [[crossDedup]]'s candidate stage, exposed for tests: cross-corpus
     * candidate pairs (id1, id2, tag1, tag2) over a `_inc`-tagged union —
-    * the tag is IN the self-join condition, so every returned pair has
-    * tag1 =!= tag2 and same-corpus pairs never materialize. */
+    * each bucket emits only pairs across its two per-side lists, so every
+    * returned pair has tag1 =!= tag2 and same-corpus pairs never
+    * materialize. */
   private[graft] def crossCandidates(taggedUnion: DataFrame, idCol: String,
       textCol: String, shingleN: Int, k: Int, bands: Int,
       maxBucket: Int): DataFrame = {
@@ -501,15 +495,15 @@ object Dedup {
    * a handful of dropped buckets is boilerplate skew working as
    * designed; thousands means the cap is eating the dedup guarantee and
    * the batch needs a d1/l1 pass first. Cost: the shingle→signature→band
-   * build plus one window — no self-join, so it is always cheaper than
-   * the dedup pass it audits.
+   * build plus one count per bucket — no pair emission, so it is always
+   * cheaper than the dedup pass it audits.
    */
   def droppedLshBuckets(corpus: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int, bands: Int, maxBucket: Int): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into $bands bands")
-    bandBuckets(minhashSig(corpus, idCol, textCol, shingleN, k), k, bands, Nil)
+    bandKeys(minhashSig(corpus, idCol, textCol, shingleN, k), k, bands, Nil)
+      .groupBy("b", "bh").agg(count(lit(1)).as("n_bucket"))
       .filter(col("n_bucket") > maxBucket)
-      .groupBy("b", "bh").agg(max(col("n_bucket")).as("n_bucket"))
   }
 
   /**

@@ -1993,7 +1993,7 @@ object Catalog {
         // pre-normalized, so the raw variant applies), never per pair;
         // verifyPairSides keeps the build candidate-sized and spread
         graft.operators.Dedup.verifyPairSides(cand, corpus, "id", "t") { cc =>
-          cc.select(col("id"), T.charNgramsRaw(col("t"), 4).as("g"))
+          cc.withColumn("g", T.charNgramsRaw(col("t"), 4))
         }
           .select(col("id1"), col("id2"), T.jaccard(col("f1"), col("f2")).as("jaccard"))
           .filter(col("jaccard") >= 0.8)

@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /**
  * Batch table readers over the driver-generated parquet directory layout
@@ -59,7 +63,41 @@ object Tables {
         raw.withColumn("ts", raw.col("ts").cast("timestamp"))
     }
   }
-  def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
+  /**
+   * The documents table, spread over the splits Spark plans for it. A
+   * parquet split holds whole row groups, so a file written as one row
+   * group lands in ONE of its splits however many the session plans (the
+   * testdata and the benchmark inputs are all single-row-group files):
+   * the per-document text kernels, shingle explodes and signatures above
+   * the scan would then run on one core. When the files hold fewer row
+   * groups than the scan's planned split count, the scan is hash-
+   * redistributed by doc_id to that count, an explicit count AQE does
+   * not coalesce; otherwise the plain scan is returned. Footers are read
+   * for at most that many files. Other tables keep the plain scan:
+   * their cheap relational aggregates lose more to the extra exchange
+   * than they gain from the spread.
+   */
+  def documents(spark: SparkSession, dir: String): DataFrame = {
+    val raw = table(spark, dir, "documents")
+    val splits = raw.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.getOrElse(1)
+    if (splits > 1 && fewerRowGroupsThan(spark, raw.inputFiles.toSeq, splits))
+      raw.repartition(splits, raw.col("doc_id"))
+    else raw
+  }
+
+  /** Whether `files` hold fewer than `n` row groups, reading footers only
+    * until the running count reaches `n` (so at most `n` files). */
+  private def fewerRowGroupsThan(spark: SparkSession, files: Seq[String], n: Int): Boolean = {
+    val conf = spark.sessionState.newHadoopConf()
+    val counts = files.iterator.take(n).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try r.getRowGroups.size finally r.close()
+    }
+    !counts.scanLeft(0)(_ + _).exists(_ >= n)
+  }
+
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /**

@@ -131,6 +131,49 @@ class OperatorsSpec extends AnyFunSuite {
     assert(tagged.map(t => (t._1, t._2)).toSet == untaggedCross)
   }
 
+  test("MinHash over a persisted input: one signature aggregate per input side, same results") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // Adaptive execution wraps each reference to a cached input in its own
+    // TableCacheQueryStage and never reuses an exchange above two of them,
+    // so a plan that references the signature table more than once computes
+    // it more than once. Only the final aggregate outputs `m0` (the partial
+    // one outputs min buffers); reused exchanges are leaves and not counted.
+    object Stages extends AdaptiveSparkPlanHelper
+    def sigAggs(df: DataFrame): Int = Stages.collect(df.queryExecution.executedPlan) {
+      case a: BaseAggregateExec if a.output.exists(_.name == "m0") => a
+    }.size
+    val vocab = (0 until 60).map(i => s"w$i")
+    // 12 families: a base doc, a one-word edit and an appended copy
+    val rows = (0 until 12).flatMap { f =>
+      val base = (0 until 14).map(j => vocab((f * 7 + j * j) % vocab.size))
+      Seq(base, base.updated(5, "edit"), base :+ "tail")
+        .zipWithIndex.map { case (ws, v) => ((f * 3 + v).toLong, ws.mkString(" ")) }
+    }
+    def build(): DataFrame = rows.toDF("id", "t")
+    val cached = build().persist()
+    try {
+      cached.count()
+      def pairsOf(c: DataFrame) = Dedup.minhashPairs(c, "id", "t",
+        shingleN = 3, k = 16, bands = 8, threshold = 0.5)
+      val onCache = pairsOf(cached)
+      val got = onCache.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(sigAggs(onCache) == 1, s"minhashPairs:\n${onCache.queryExecution.executedPlan}")
+      assert(got.nonEmpty)
+      assert(got == pairsOf(build()).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+      def crossOf(c: DataFrame) = Dedup.crossDedup(
+        c.filter(col("id") % 3 =!= 0), c.filter(col("id") % 3 === 0), "id", "t",
+        shingleN = 3, k = 16, bands = 8, threshold = 0.5)
+      val crossCached = crossOf(cached)
+      val kept = crossCached.collect().map(_.getLong(0)).toSet
+      assert(sigAggs(crossCached) == 2, s"crossDedup:\n${crossCached.queryExecution.executedPlan}")
+      assert(kept.size < rows.size * 2 / 3, "some incoming near-copies must drop")
+      assert(kept == crossOf(build()).collect().map(_.getLong(0)).toSet)
+    } finally cached.unpersist()
+  }
+
   test("sharedSpans: longest shared word span via gram runs; frequency cap; no short-span noise") {
     val corpus = Seq(
       (1L, "a1 b1 c d e f g h1 i1"), // shares "c d e f g" (5 words) with 2
