@@ -434,6 +434,12 @@ object Dedup {
       shingleN: Int, k: Int): DataFrame =
     minhashSig(corpus, idCol, textCol, shingleN, k)
 
+  /** The schema [[minhashSignature]] writes over a BIGINT id column: the
+    * read contract of a persisted band index, so a reader declares it
+    * instead of inferring it from the files (an inference job per read). */
+  def minhashSignatureSchema(k: Int): String =
+    ("id BIGINT" +: (0 until k).map(j => s"m$j BIGINT")).mkString(", ")
+
   /** [[crossDedup]] with the REFERENCE side's signatures precomputed
     * (a [[minhashSignature]] table, typically read back from the
     * store's persisted band index): only the incoming slice is
@@ -812,7 +818,7 @@ object Dedup {
     def save(df: DataFrame): (DataFrame, Set[Int]) = {
       val before = persistedIds
       try {
-        val out = if (effDir.isDefined) df.checkpoint() else df.localCheckpoint()
+        val out = graft.util.Lineage.cut(df, effDir).df
         (out, persistedIds -- before)
       } catch {
         // an eager checkpoint PERSISTS before its job runs — a failing

@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
+import graft.util.{Cut, Lineage}
+
 /** Per-key upsert state carried across triggers by [[EventStream.runningUpsert]]:
   * seen-range plus the payload of the latest event (by ts, then event_id). */
 case class UpsertState(
@@ -770,20 +772,17 @@ object EventStream {
   def crawlIntakeBatch(statePath: String, corpusRoot: String, nBuckets: Int,
       markers: Seq[(String, Seq[String])], stops: Seq[String],
       minQuality: Double)(batch: DataFrame, batchId: Long): Unit = {
-    import graft.functions.{text => T}
-    import graft.sources.ManifestStore
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark) // unicodeFold
+    graft.plans.VectorExpressions.ensureRegistered(batch.sparkSession) // unicodeFold
     // stage the slice once: the body reads it for the winner window,
     // the per-curl counts, the anti-join and the gate chain — without
     // this each consumer re-derives the upstream projection (measured
-    // ~30% of p8's cost at sf0.1)
-    val slice = batch.persist()
+    // ~30% of p8's cost at sf0.1). A lineage cut, not a cache: each
+    // reference plans as a leaf scan, not as a cache stage of its own.
+    val slice = Lineage.cut(batch)
     try {
-      crawlIntakeStaged(slice, batchId, statePath, corpusRoot, nBuckets,
+      crawlIntakeStaged(slice.df, batchId, statePath, corpusRoot, nBuckets,
         markers, stops, minQuality)
-    } finally slice.unpersist(blocking = false)
+    } finally slice.release()
   }
 
   private def crawlIntakeStaged(batch: DataFrame, batchId: Long,
@@ -939,7 +938,10 @@ object EventStream {
    * the buckets that gained a genuinely NEW curl (a set union is
    * idempotent, so re-seen curls change nothing and carry by
    * reference); ledgers are domain-sized; per-trigger dedup cost is
-   * slice-sized; nothing ever re-reads the corpus or the frontier.
+   * slice-sized and no trigger re-reads the whole frontier. One read is
+   * still store-sized: the frontier's not-in-store anti-join scans the
+   * store's whole `curl` column every trigger (one column, never the
+   * text).
    */
   def corpusAdmissionBatch(statePath: String, storePath: String,
       storeSigPath: String, shingleN: Int, k: Int, bands: Int,
@@ -947,80 +949,87 @@ object EventStream {
       stops: Seq[String], minQuality: Double, nBuckets: Int = 16)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.functions.{text => T}
+    import graft.operators.Dedup
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    // stage the slice once: winners, counts and the gate chain all read it
-    val slice = batch.persist()
+    // every intermediate read more than once is staged as a lineage cut,
+    // not persisted: later plans see one leaf scan per reference, so they
+    // neither re-print the staged lineage nor open a cache stage (and a
+    // job) per reference; each cut is released on the way out
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[Cut]
+    def stage(df: DataFrame): DataFrame = {
+      val c = Lineage.cut(df); cuts += c; c.df
+    }
     try {
+      val slice = stage(batch)
       val store = spark.read.schema(admissionStoreSchema).parquet(storePath)
       val seenRoot = s"$statePath/seen"
-      // A. frontier: slice winner -> unseen vs prior triggers -> not in store
-      val winners = slice.withColumn("__rn", row_number().over(
-          Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
-        .filter(col("__rn") === 1).drop("__rn")
-        .withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets))
+      // A. frontier: slice winner -> unseen vs prior triggers -> not in
+      // store. Every slice curl has a winner, so the slice's own curls
+      // name the seen-set buckets the anti-join reads.
       val prev =
         if (batchId == 0) None
         else Some(FrontierState.readBuckets(spark, seenRoot,
           FrontierState.version(batchId - 1), admissionSeenSchema,
-          FrontierState.affectedBuckets(winners)))
-      val unseenB = prev match {
+          FrontierState.affectedBuckets(slice.select(
+            FrontierState.bucketOf(col("curl"), nBuckets).as("bucket")))))
+      val winners = slice.withColumn("__rn", row_number().over(
+          Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
+        .filter(col("__rn") === 1).drop("__rn")
+        .withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets))
+      // the window and the seen anti-join run once, into the frontier
+      // both the seen-set fold and `fresh` read
+      val unseen = stage(prev match {
         case None => winners
         case Some(seen) =>
           winners.join(seen.select(col("curl")), Seq("curl"), "left_anti")
-      }
+      })
       // the seen-set union only grows by the genuinely NEW curls, so the
       // contribution (and the bucket rewrite) is restricted to exactly
       // the buckets that gained one; base is re-read inside foldPublish
       // pruned to THOSE buckets (a subset of the anti-join's read)
       FrontierState.foldPublish(seenRoot, batchId,
-        unseenB.select(col("curl"), col("bucket")),
+        unseen.select(col("curl"), col("bucket")),
         admissionSeenSchema)((base, delta) => base.unionByName(delta))
-      val unseen = unseenB.drop("bucket")
-      val fresh = unseen.join(store.select("curl").distinct(),
-        Seq("curl"), "left_anti").persist()
+      // this anti-join scans the store's whole curl column every trigger
+      val fresh = stage(unseen.drop("bucket")
+        .join(store.select("curl"), Seq("curl"), "left_anti"))
       // B. near-dup admission: the trigger slice banded against the
       // store's PERSISTED band index (Dedup.minhashSignature, written
       // once at store-build time) — per-trigger cost is the slice's
       // own signature build + the bucket join; the store text is
       // touched only candidate-sized, inside verification
-      val novel = graft.operators.Dedup.crossDedupPresigned(
+      val novel = Dedup.crossDedupPresigned(
         fresh.select(col("doc_id").as("id"), col("t"), col("domain")),
         store.select(col("doc_id").as("id"), col("t")),
-        spark.read.parquet(storeSigPath),
-        "id", "t", shingleN, k, bands, threshold, maxBucket).persist()
+        spark.read.schema(Dedup.minhashSignatureSchema(k)).parquet(storeSigPath),
+        "id", "t", shingleN, k, bands, threshold, maxBucket)
       // C. t2's quality formula over the staged text
       val ws = split(col("t"), " ")
       val lenScore = least(length(col("t")).cast("double") / 500.0, lit(1.0))
       val punct = (length(col("t")) -
         length(regexp_replace(col("t"), "[a-z0-9 ]", "")))
         .cast("double") / length(col("t")).cast("double")
-      val admitted = novel
-        .withColumn("quality",
-          lenScore * 0.35 + T.distinctRatio(ws) * 0.25 +
-            (lit(1.0) - punct) * 0.25 + T.stopwordRatio(ws, stops) * 0.15)
-        .filter(col("quality") >= minQuality)
-      // trigger ledger: the per-domain funnel counts (left joins from
-      // the slice's own domains, zero-coalesced — so cross-trigger
-      // sums reproduce p7's batch left joins exactly)
-      def cnt(df: DataFrame, n: String) =
-        df.groupBy("domain").agg(count(lit(1)).as(n))
-      cnt(slice, "n_new")
-        .join(cnt(fresh, "n_fresh"), Seq("domain"), "left")
-        .join(cnt(novel, "n_novel"), Seq("domain"), "left")
-        .join(admitted.groupBy("domain")
-          .agg(count(lit(1)).as("n_admitted"),
-            sum(size(split(col("t"), " ")).cast("long")).as("n_tokens")),
-          Seq("domain"), "left")
-        .select(col("domain"), col("n_new"),
-          coalesce(col("n_fresh"), lit(0L)).as("n_fresh"),
-          coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-          coalesce(col("n_admitted"), lit(0L)).as("n_admitted"),
-          coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
+      val admitted = lenScore * 0.35 + T.distinctRatio(ws) * 0.25 +
+        (lit(1.0) - punct) * 0.25 + T.stopwordRatio(ws, stops) * 0.15 >= minQuality
+      // trigger ledger: the per-domain funnel counts as ONE aggregate over
+      // the union of its three levels. Domains come from the slice; the
+      // fresh and novel levels drop null domains, as equi-joins from the
+      // slice's domains would — so cross-trigger sums reproduce p7's
+      // batch left joins exactly.
+      val (zero, one) = (lit(0L), lit(1L))
+      val counts = Seq("n_new", "n_fresh", "n_novel", "n_admitted", "n_tokens")
+      slice.select(col("domain"), one, zero, zero, zero, zero)
+        .unionAll(fresh.filter(col("domain").isNotNull)
+          .select(col("domain"), zero, one, zero, zero, zero))
+        .unionAll(novel.filter(col("domain").isNotNull)
+          .select(col("domain"), zero, zero, one, when(admitted, one).otherwise(zero),
+            when(admitted, size(ws).cast("long")).otherwise(zero)))
+        .toDF("domain" +: counts: _*)
+        .groupBy("domain")
+        .agg(sum(counts.head).as(counts.head), counts.tail.map(c => sum(c).as(c)): _*)
         .write.mode("overwrite").parquet(s"$statePath/ledger/trig=$batchId")
-      fresh.unpersist(blocking = false)
-      novel.unpersist(blocking = false)
-    } finally slice.unpersist(blocking = false)
+    } finally cuts.foreach(_.release())
   }
 
   /** p8's published-corpus schema (the ManifestStore read contract). */

@@ -1280,6 +1280,100 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("streaming corpus admission stages lineage cuts: no cached relation in the ledger plan, staged RDDs released, either medium") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val stops = Seq("the", "and", "on")
+    val good = "the quick brown fox jumps over the lazy dog and the cat"
+    val stored = good + " original corpus document kept"
+    val junk = "zzzz !!!! zzzz !!!!"
+    val dir = java.nio.file.Files.createTempDirectory("s26cuts").toString
+    Seq((100L, "a.com", "https://a.com/s1", stored),
+      (101L, "b.com", "https://b.com/s2",
+        "some other stored document with the usual words and structure"))
+      .toDF("doc_id", "domain", "curl", "t")
+      .write.parquet(s"$dir/store")
+    graft.operators.Dedup.minhashSignature(
+      spark.read.parquet(s"$dir/store").select(col("doc_id").as("id"), col("t")),
+      "id", "t", shingleN = 3, k = 16)
+      .write.parquet(s"$dir/store_sig")
+    // s26's gates plus a curl fetched twice inside one slice (doc 3 wins
+    // the winner window; doc 4, junk, must not) and a doc with no
+    // registered domain, whose ledger row counts only its arrival (the
+    // later funnel levels never matched a null domain)
+    val triggers = Seq(
+      Seq((1L, "a.com", "https://a.com/1", good),
+        (2L, "a.com", "https://a.com/s1", good),
+        (3L, "a.com", "https://a.com/3", good),
+        (4L, "a.com", "https://a.com/3", junk),
+        (5L, null, "https://localhost/5", good)),
+      Seq((6L, "a.com", "https://a.com/1", good),
+        (7L, "b.com", "https://b.com/7", stored),
+        (8L, "a.com", "https://a.com/3", good)))
+    val expected = Seq(
+      Set(("a.com", 4L, 2L, 2L, 2L, 24L), (null, 1L, 0L, 0L, 0L, 0L)),
+      Set(("a.com", 2L, 0L, 0L, 0L, 0L), ("b.com", 1L, 1L, 0L, 0L, 0L)))
+    val sc = spark.sparkContext
+    def persistedIds = sc.getPersistentRDDs.keySet.toSet
+    val before = persistedIds
+    // the caller's own staging: a frame persisted before the trigger
+    val input = triggers.zipWithIndex
+      .flatMap { case (t, i) => t.map { case (d, dm, u, x) => (d, dm, u, x, i) } }
+      .toDF("doc_id", "domain", "curl", "t", "trig").persist()
+    input.count()
+    val callerIds = persistedIds -- before
+    assert(callerIds.nonEmpty)
+    def run(root: String): Seq[Set[(String, Long, Long, Long, Long, Long)]] =
+      triggers.indices.map { i =>
+        EventStream.corpusAdmissionBatch(root, s"$dir/store", s"$dir/store_sig",
+          3, 16, 4, 0.8, 1000, stops, 0.27)(
+          input.filter(col("trig") === i).drop("trig"), i.toLong)
+        spark.read.schema(EventStream.admissionLedgerSchema)
+          .parquet(s"$root/ledger/trig=$i")
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+      }
+    // the final plan of each ledger write
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toString.contains("/ledger/trig=") =>
+            plans.add(qe.executedPlan.toString)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val local = run(s"$dir/local")
+      assert(local == expected, s"ledgers: $local")
+      eventually(timeout(30.seconds)) { assert(plans.size == triggers.size) }
+      plans.forEach { p =>
+        assert(!p.contains("InMemoryRelation") && !p.contains("TableCacheQueryStage"),
+          s"a staged intermediate planned as a cached relation:\n$p")
+        assert(p.contains("Scan ExistingRDD"), s"no lineage-cut leaf:\n$p")
+      }
+      val after = persistedIds
+      assert(callerIds.subsetOf(after), "the caller's persisted frame must survive the trigger")
+      assert((after -- before -- callerIds).isEmpty,
+        s"RDDs the trigger staged must be released: ${after -- before -- callerIds}")
+      // the reliable medium stages the same frames: identical ledgers
+      spark.conf.set("spark.graft.checkpointDir",
+        java.nio.file.Files.createTempDirectory("s26ckpt").toString)
+      try assert(run(s"$dir/reliable") == local)
+      finally spark.conf.unset("spark.graft.checkpointDir")
+      assert((persistedIds -- before -- callerIds).isEmpty)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      input.unpersist()
+    }
+  }
+
   test("streaming growth accounting: day-sliced fold == batch ledger; frontier crosses triggers") {
     import graft.operators.Temporal
     implicit val ctx = spark.sqlContext
