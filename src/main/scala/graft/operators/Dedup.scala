@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{text => T, vectors => V}
+import graft.util.{Fixpoint, Lineage}
 
 /**
  * Deduplication family for large-scale training-data pipelines. The exact
@@ -764,9 +765,10 @@ object Dedup {
    * follow real edges, so labels can never cross components; the result
    * is deterministic at any parallelism.
    *
-   * This is the engine's ONE iterative operator, and it uses the two
-   * tools iteration genuinely requires (as GraphX/Pregel does):
-   *  - an EAGER checkpoint per round — without lineage truncation
+   * Like the Graph loops it runs through [[graft.util.Lineage.iterate]],
+   * the engine's one round loop, which supplies the two tools
+   * iteration genuinely requires (as GraphX/Pregel does):
+   *  - an EAGER lineage cut per round — without lineage truncation
    *    the logical plan re-embeds the previous round's tree several
    *    times per round, growing ~3^rounds (analysis alone hangs);
    *  - a driver-side convergence loop — bounded at O(log diameter)
@@ -799,84 +801,37 @@ object Dedup {
     require(maxRounds >= 1, "at least one propagation round")
     val sc = nodes.sparkSession.sparkContext
     // r17 (verdict item 3): `spark.graft.checkpointDir` on the session
-    // opts every round save into RELIABLE checkpointing — executor-loss-
+    // opts every round cut into RELIABLE checkpointing — executor-loss-
     // safe round state at scale; unset keeps localCheckpoint (the local
     // bench default). The explicit parameter still wins when passed.
     val effDir = checkpointDir.orElse(
       nodes.sparkSession.conf.getOption("spark.graft.checkpointDir"))
     effDir.foreach(sc.setCheckpointDir)
-    // Each eager localCheckpoint PERSISTS its blocks for the life of the
-    // session; without explicit cleanup every round of every call pins
-    // another label table in the block manager (and its delayed GC-driven
-    // cleanup lands inside whatever runs next — measured as multi-second
-    // noise on later queries in a bench pass). Track the RDD ids each
-    // save() persists (id-set diff; this operator is single-threaded) and
-    // drop a round's blocks as soon as the NEXT eager checkpoint exists.
-    def persistedIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def drop(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    def save(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = persistedIds
-      try {
-        val out = graft.util.Lineage.cut(df, effDir).df
-        (out, persistedIds -- before)
-      } catch {
-        // an eager checkpoint PERSISTS before its job runs — a failing
-        // save can leave blocks behind with no caller to track them
-        case e: Throwable => drop(persistedIds -- before); throw e
-      }
-    }
-    var edgeIds = Set.empty[Int]
-    var labelIds = Set.empty[Int]
-    // any failure path (a save, a round's job dying, the non-convergence
-    // throw) returns no DataFrame that could need the tracked blocks —
-    // drop them on the way out or they pin block-manager memory for the
-    // life of the session
+    // the symmetrized edge list is cut once and read by every round; the
+    // returned labels read only the final round's cut, so the edge cut is
+    // released on every path out
+    val edges = Lineage.cut(pairs.select(col(id1).as("src"), col(id2).as("dst"))
+      .unionAll(pairs.select(col(id2).as("src"), col(id1).as("dst"))), effDir)
     try {
-      val edges = { val s = save(pairs.select(col(id1).as("src"), col(id2).as("dst"))
-          .unionAll(pairs.select(col(id2).as("src"), col(id1).as("dst"))))
-        edgeIds = s._2; s._1 }
-      var labels = { val s = save(nodes.select(col(idCol).as("id"), col(idCol).as("comp")))
-        labelIds = s._2; s._1 }
-      def labelSum(df: DataFrame): java.math.BigDecimal =
+      def labelSum(df: DataFrame) =
         df.agg(sum(col("comp").cast("decimal(38,0)"))).collect().head.getDecimal(0)
-      var prevSum = labelSum(labels)
-      var converged = false
-      var round = 0
-      while (!converged && round < maxRounds) {
-        val nbrMin = edges
+      Lineage.iterate(nodes.select(col(idCol).as("id"), col(idCol).as("comp")),
+        maxRounds, effDir, Some(Fixpoint(labelSum,
+          s"connectedComponents did not converge within maxRounds=$maxRounds " +
+            "(labels would be silently partial); raise maxRounds — rounds needed " +
+            "grows with log2(component diameter)"))) { labels =>
+        val nbrMin = edges.df
           .join(labels.select(col("id").as("dst"), col("comp").as("dst_comp")), "dst")
           .groupBy(col("src").as("id")).agg(min("dst_comp").as("nbr_comp"))
         val jumped = labels
           .join(nbrMin, Seq("id"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        val (nextLabels, nextIds) = save(jumped
+        jumped
           .join(jumped.select(col("id").as("comp"), col("comp").as("comp2")), Seq("comp"), "left")
-          .select(col("id"), least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp")))
-        drop(labelIds) // superseded round — next checkpoint is already eager/materialized
-        labels = nextLabels
-        labelIds = nextIds
-        val s = labelSum(labels)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        round += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge within maxRounds=$maxRounds " +
-            "(labels would be silently partial); raise maxRounds — rounds needed " +
-            "grows with log2(component diameter)")
-      drop(edgeIds) // final labels are materialized; the edge list is dead
-      // the FINAL label checkpoint stays persisted — the returned DataFrame
-      // reads from it (truncated lineage has no recompute path)
-      labels.select(col("id"), col("comp").as("component_id"))
-    } catch {
-      case e: Throwable =>
-        drop(edgeIds)
-        drop(labelIds)
-        throw e
-    }
+          .select(col("id"), least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"))
+      }.select(col("id"), col("comp").as("component_id"))
+    } finally edges.release()
   }
 
   /**

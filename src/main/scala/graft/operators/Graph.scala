@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.Lineage
+import graft.util.{Cut, Fixpoint, Lineage}
 
 /**
  * Iterative graph analytics — the operator class a corpus-curation
@@ -24,9 +24,10 @@ import graft.util.Lineage
  *    bit-for-bit. No float accumulation anywhere.
  *  - The driver holds COORDINATOR STATE only (iteration counter, the
  *    frontier-exhausted flag, node count); per-round state lives in
- *    checkpointed distributed tables (the connectedComponents
- *    discipline: eager localCheckpoint per round to truncate lineage,
- *    superseded rounds' blocks dropped immediately).
+ *    checkpointed distributed tables. Single-state loops run through
+ *    [[graft.util.Lineage.iterate]] (one lineage cut per round, the
+ *    superseded round's cut released as soon as the next exists); the
+ *    two-state loops (seedDistance, hits) hold their cuts directly.
  *  - The static tables each round re-joins (edges + out-degrees) are
  *    PRE-PARTITIONED on the join key and cached, so every iteration
  *    re-shuffles only the (small) per-round state, never the edge list:
@@ -52,22 +53,18 @@ object Graph {
     math.max(1, math.min(conf, math.ceil(nRows / 524288.0).toInt))
   }
 
-  /** block-manager hygiene for iterative loops — the connectedComponents
-    * pattern: track which RDD ids each eager checkpoint persists, drop a
-    * round's blocks as soon as the next round's checkpoint is live. */
-  private final class RoundState(sc: org.apache.spark.SparkContext) {
-    private def persistedIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def drop(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    def save(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = persistedIds
-      try {
-        val out = Lineage.cut(df).df
-        (out, persistedIds -- before)
-      } catch {
-        case e: Throwable => drop(persistedIds -- before); throw e
-      }
-    }
+  /** Stage a (`src`, `dst`) edge list for the round loops: cache the
+    * caller's construction once to size the round width to the data (see
+    * dataWidth), then cache it hash-partitioned on src — one construction
+    * pass total. The caller unpersists the result. */
+  private def stageEdges(edges: DataFrame): DataFrame = {
+    val e0 = edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")).persist()
+    try {
+      val e = e0.repartition(dataWidth(edges.sparkSession, e0.count()), col("src")).persist()
+      e.count()
+      e
+    } finally e0.unpersist(blocking = false)
   }
 
   /**
@@ -86,12 +83,13 @@ object Graph {
    * Scale shape: edges ⋈ outdeg is computed ONCE, hash-partitioned on
    * src, and cached — each of the K rounds shuffles only the rank table
    * (one exchange to src partitioning, one for the dst aggregation).
-   * Rank state is localCheckpoint-ed per round (lineage truncation) with
-   * immediate cleanup of the superseded round. Nodes without in-edges
-   * keep the teleport floor via the left join from the node table.
-   * Dangling nodes (no OUT-edges) simply contribute nothing — callers
-   * that need mass conservation add reverse edges (the bipartite
-   * both-directions construction has none by construction).
+   * Rank state is cut per round by [[graft.util.Lineage.iterate]]
+   * (lineage truncation, the superseded round released immediately).
+   * Nodes without in-edges keep the teleport floor via the left join
+   * from the node table. Dangling nodes (no OUT-edges) simply
+   * contribute nothing — callers that need mass conservation add
+   * reverse edges (the bipartite both-directions construction has none
+   * by construction).
    *
    * `teleportSeeds` turns the uniform walk into TRUSTRANK (Gyöngyi et
    * al. 2004): the random jump lands ONLY on the trusted seed set —
@@ -115,8 +113,6 @@ object Graph {
       weightCol: Option[String] = None): DataFrame = {
     require(iterations >= 1, "at least one power-iteration round")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val st = new RoundState(sc)
     // the caller's edge construction can be expensive (a join + distinct
     // at the catalog fixtures) and is consumed FOUR times below (both
     // sides of the degree join, both legs of the node union) — cache it
@@ -146,7 +142,6 @@ object Graph {
           Seq("id"), "left")
           .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
     }).persist()
-    var labelIds = Set.empty[Int]
     try {
       val nBase = nodes.filter(col("is_seed")).count()
       require(nBase > 0,
@@ -183,13 +178,11 @@ object Graph {
       val init = math.floor(scale.toDouble / nBase).toLong
       val teleport = math.floor(15.0 * scale / (100.0 * nBase)).toLong
       def seedLit(v: Long) = when(col("is_seed"), lit(v)).otherwise(lit(0L))
-      var ranks = { val s = st.save(nodes.select(col("id"), seedLit(init).as("r")))
-        labelIds = s._2; s._1 }
       val numer = weightCol match {
         case None => lit(85) * col("r")
         case Some(_) => lit(85) * col("r") * col("w")
       }
-      (1 to iterations).foreach { _ =>
+      Lineage.iterate(nodes.select(col("id"), seedLit(init).as("r")), iterations) { ranks =>
         // r'(v) = teleport(v) + Σ_in c(u->v) as ONE union-aggregate: the
         // cached node table contributes each node's teleport term (so
         // every node — in-edges or not — lands in the output exactly as
@@ -201,17 +194,11 @@ object Graph {
           .select(col("dst").as("id"),
             floor(numer.cast("double") /
               (lit(100) * col("outdeg")).cast("double")).cast("long").as("c"))
-        val (next, ids) = st.save(nodes
+        nodes
           .select(col("id"), seedLit(teleport).as("c"))
           .unionAll(contrib)
-          .groupBy("id").agg(sum("c").as("r")))
-        st.drop(labelIds)
-        ranks = next
-        labelIds = ids
-      }
-      ranks.select(col("id"), col("r").as("rank_scaled"))
-    } catch {
-      case e: Throwable => st.drop(labelIds); throw e
+          .groupBy("id").agg(sum("c").as("r"))
+      }.select(col("id"), col("r").as("rank_scaled"))
     } finally {
       e.unpersist(blocking = false)
       edgesDeg.unpersist(blocking = false)
@@ -237,44 +224,34 @@ object Graph {
   def seedDistance(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    val spark = edges.sparkSession
-    val st = new RoundState(spark.sparkContext)
-    // cache the raw construction once, size the round width to the data
-    // (dataWidth — the r17 scaling fix), then re-cache partitioned on
-    // src; the second pass reads the first cache, and the raw copy is
-    // dropped as soon as the partitioned one is materialized
-    val e0 = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).persist()
-    val width = dataWidth(spark, e0.count())
-    val e = e0.repartition(width, col("src")).persist()
-    e.count()
-    e0.unpersist(blocking = false)
-    var distIds = Set.empty[Int]
-    var frontIds = Set.empty[Int]
+    val e = stageEdges(edges)
     try {
-      val seed0 = seeds.select(col("id").cast("long").as("id")).distinct()
-      var dist = { val s = st.save(seed0.withColumn("dist", lit(0L)))
-        distIds = s._2; s._1 }
-      var frontier = dist.select("id")
-      var frontierNonEmpty = frontier.limit(1).count() > 0
-      var hop = 1
-      while (frontierNonEmpty && hop <= maxHops) {
-        val next = frontier
-          .join(e, frontier("id") === e("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-        val (nf, nfIds) = st.save(next)
-        val (nd, ndIds) = st.save(dist.unionAll(nf.withColumn("dist", lit(hop.toLong))))
-        st.drop(distIds); st.drop(frontIds)
-        dist = nd; distIds = ndIds
-        frontier = nf; frontIds = nfIds
-        frontierNonEmpty = frontier.limit(1).count() > 0
-        hop += 1
+      // two live states per hop (labels + frontier), so the cuts are held
+      // here rather than through Lineage.iterate
+      var dist = Lineage.cut(seeds.select(col("id").cast("long").as("id")).distinct()
+        .withColumn("dist", lit(0L)))
+      var front = Option.empty[Cut]
+      try {
+        var frontier = dist.df.select("id")
+        var frontierNonEmpty = frontier.limit(1).count() > 0
+        var hop = 1
+        while (frontierNonEmpty && hop <= maxHops) {
+          val nf = Lineage.cut(frontier
+            .join(e, frontier("id") === e("src"))
+            .select(col("dst").as("id")).distinct()
+            .join(dist.df, Seq("id"), "left_anti"))
+          front.foreach(_.release()); front = Some(nf)
+          val nd = Lineage.cut(dist.df.unionAll(nf.df.withColumn("dist", lit(hop.toLong))))
+          dist.release(); dist = nd
+          frontier = nf.df
+          frontierNonEmpty = frontier.limit(1).count() > 0
+          hop += 1
+        }
+        front.foreach(_.release())
+        dist.df
+      } catch {
+        case ex: Throwable => dist.release(); front.foreach(_.release()); throw ex
       }
-      st.drop(frontIds)
-      dist
-    } catch {
-      case ex: Throwable => st.drop(distIds); st.drop(frontIds); throw ex
     } finally e.unpersist(blocking = false)
   }
 
@@ -355,30 +332,17 @@ object Graph {
    * src partitioning, one partial-aggregated (dst, lab) count whose
    * second per-dst argmax fold moves one row per DISTINCT neighbor
    * label, not per edge). The argmax is max(struct(count, -lab)) — a
-   * plain aggregate, no sort window. Per-round state is checkpointed
-   * with immediate superseded-block cleanup (the pageRank discipline).
+   * plain aggregate, no sort window. Per-round state is cut by
+   * [[graft.util.Lineage.iterate]], the superseded round released
+   * immediately.
    */
   def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "at least one propagation round")
-    val spark = edges.sparkSession
-    val st = new RoundState(spark.sparkContext)
-    // data-sized round width (see dataWidth) via a cache-count-recache
-    // of the caller's construction — one construction pass total
-    val e0 = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).persist()
-    val width = dataWidth(spark, e0.count())
-    val e = e0.repartition(width, col("src")).persist()
-    e.count()
-    e0.unpersist(blocking = false)
-    var labIds = Set.empty[Int]
+    val e = stageEdges(edges)
     try {
       val nodes = e.select(col("src").as("id"))
         .unionAll(e.select(col("dst").as("id"))).distinct()
-      var labels = {
-        val s0 = st.save(nodes.select(col("id"), col("id").as("lab")))
-        labIds = s0._2; s0._1
-      }
-      (1 to iterations).foreach { _ =>
+      Lineage.iterate(nodes.select(col("id"), col("id").as("lab")), iterations) { labels =>
         // the "no in-edges keep their label" rule rides the vote union as
         // a zero-count self-row instead of a per-round left join: a real
         // vote (c >= 1) always beats the self-row (c = 0) in the argmax,
@@ -392,16 +356,10 @@ object Graph {
           .agg(sum("c").as("c"))
         // argmax by (count desc, lab asc): struct compares fields in
         // order, so max(struct(c, -lab)) is the fully tie-broken pick
-        val (next, ids) = st.save(votes.groupBy("id")
+        votes.groupBy("id")
           .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-          .select(col("id"), (-col("m.nl")).as("lab")))
-        st.drop(labIds)
-        labels = next
-        labIds = ids
+          .select(col("id"), (-col("m.nl")).as("lab"))
       }
-      labels
-    } catch {
-      case ex: Throwable => st.drop(labIds); throw ex
     } finally e.unpersist(blocking = false)
   }
 
@@ -429,52 +387,29 @@ object Graph {
    * Scale shape: each round is one degree aggregate (map-side partial
    * on both endpoint legs) plus two left-semi joins against the
    * surviving-node set — every shuffle carries the CURRENT edge set,
-   * which only shrinks; per-round state is localCheckpoint-ed with
-   * immediate superseded-block cleanup (the pageRank discipline), and
-   * convergence is a 1-row count — genuine coordinator state. Real
-   * graphs converge in few synchronous rounds (each round peels a whole
-   * degeneracy layer); at 100 TB the edge diet after round 1 is the
-   * dominant saving, since degree-<k leaves are the bulk of a web-scale
-   * graph.
+   * which only shrinks; per-round state is cut by
+   * [[graft.util.Lineage.iterate]] (the superseded round released
+   * immediately), and convergence is its fixpoint on the edge count — a
+   * 1-row count, genuine coordinator state. Real graphs converge in few
+   * synchronous rounds (each round peels a whole degeneracy layer); at
+   * 100 TB the edge diet after round 1 is the dominant saving, since
+   * degree-<k leaves are the bulk of a web-scale graph.
    */
   def kCore(canonicalEdges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "need k >= 1 and at least one round")
-    val spark = canonicalEdges.sparkSession
-    val st = new RoundState(spark.sparkContext)
-    var eIds = Set.empty[Int]
-    var e = {
-      val s0 = st.save(canonicalEdges.select(
-        col("a").cast("long").as("a"), col("b").cast("long").as("b")))
-      eIds = s0._2; s0._1
+    val e = Lineage.iterate(
+      canonicalEdges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b")),
+      maxRounds, fixpoint = Some(Fixpoint(_.count(),
+        s"k-core still peeling after $maxRounds rounds — raise maxRounds"))) { cur =>
+      val deg = cur.select(col("a").as("id"))
+        .unionAll(cur.select(col("b").as("id")))
+        .groupBy("id").agg(count(lit(1)).as("deg"))
+      val keep = deg.filter(col("deg") >= k).select("id")
+      cur.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
     }
-    try {
-      var nEdges = e.count()
-      var converged = false
-      var round = 0
-      while (round < maxRounds && !converged) {
-        round += 1
-        val deg = e.select(col("a").as("id"))
-          .unionAll(e.select(col("b").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("deg"))
-        val keep = deg.filter(col("deg") >= k).select("id")
-        val pruned = e
-          .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        val (next, ids) = st.save(pruned)
-        val nNext = next.count() // 1-row coordinator state: converged?
-        st.drop(eIds)
-        e = next; eIds = ids
-        converged = nNext == nEdges
-        nEdges = nNext
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"k-core still peeling after $maxRounds rounds — raise maxRounds")
-      e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("core_degree"))
-    } catch {
-      case ex: Throwable => st.drop(eIds); throw ex
-    }
+    e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("core_degree"))
   }
 
   /**
@@ -506,68 +441,55 @@ object Graph {
    * propagates outward one hop per layer (mean of nothing is not 0 — a
    * silent zero would poison downstream normalization).
    *
-   * Scale shape: the pageRank discipline without the iteration-to-
-   * convergence — edges hash-partitioned on src ONCE and cached, each
-   * layer shuffles only the (node, value) table (one exchange to src
-   * partitioning via the join, one partial-aggregated mean per dst);
-   * K layers = K small shuffles, never K edge materializations.
+   * Scale shape: pageRank's [[graft.util.Lineage.iterate]] loop without
+   * the iteration-to-convergence — edges hash-partitioned on src ONCE
+   * and cached, each layer shuffles only the (node, value) table (one
+   * exchange to src partitioning via the join, one partial-aggregated
+   * mean per dst); K layers = K small shuffles, never K edge
+   * materializations.
    */
   def neighborMeanAgg(edges: DataFrame, features: DataFrame,
       layers: Int): DataFrame = {
     require(layers >= 1, "at least one aggregation layer")
-    val spark = edges.sparkSession
-    // data-sized round width (see dataWidth) via a cache-count-recache
-    // of the caller's construction — one construction pass total
-    val e0 = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).persist()
-    val width = dataWidth(spark, e0.count())
-    val e = e0.repartition(width, col("src")).persist()
-    e.count()
-    e0.unpersist(blocking = false)
-    val st = new RoundState(spark.sparkContext)
-    var hIds = Set.empty[Int]
+    val e = stageEdges(edges)
     try {
-      // node set + per-layer state are checkpointed (the pageRank
-      // lineage-truncation discipline) — without it layer k re-embeds
-      // every prior layer's joins into one deep plan
-      val nodes = st.save(e.select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id"))).distinct())._1
-      var h = {
-        val s0 = st.save(features.select(col("id").cast("long").as("id"),
-          col("x").cast("long").as("h")))
-        hIds = s0._2; s0._1
-      }
-      // DIV-truncation contract (see Scaladoc): half-up only holds for
-      // non-negative sums; one min() over the (already checkpointed,
-      // node-count-sized) feature table guards every layer
-      val minH = h.agg(min(col("h"))).head
-      require(minH.isNullAt(0) || minH.getLong(0) >= 0L,
-        s"neighborMeanAgg requires non-negative feature values " +
-          s"(half-up DIV identity breaks on negative sums); min = " +
-          s"${minH.getLong(0)}")
-      (1 to layers).foreach { _ =>
-        // every node rides the aggregate as a null-valued base row from
-        // the checkpointed node table: sum/count ignore the null, so a
-        // node with no valued in-neighbors keeps n = 0 and emits NULL —
-        // exactly the old left join's semantics, one exchange per layer
-        // instead of an aggregate plus a node-table join (guide §2.4)
-        val (next, ids) = st.save(e.join(h, e("src") === h("id"))
-          .select(e("dst").as("id"), col("h"))
-          .unionAll(nodes.select(col("id"), lit(null).cast("long").as("h")))
-          .groupBy("id")
-          .agg(
-            sum(col("h").cast("decimal(38,0)")).as("sd"),
-            count(col("h")).as("n"))
-          .select(col("id"),
-            when(col("n") > 0,
-              expr("CAST((2 * sd + n) DIV (2 * n) AS BIGINT)")).as("h")))
-        st.drop(hIds)
-        h = next
-        hIds = ids
-      }
-      h
-    } catch {
-      case ex: Throwable => st.drop(hIds); throw ex
+      // the node set is cut like the per-layer state — without lineage
+      // truncation layer k re-embeds every prior layer's joins into one
+      // deep plan — and released once the last layer is materialized
+      val nodes = Lineage.cut(e.select(col("src").as("id"))
+        .unionAll(e.select(col("dst").as("id"))).distinct())
+      try {
+        var layer = 0
+        Lineage.iterate(features.select(col("id").cast("long").as("id"),
+            col("x").cast("long").as("h")), layers) { h =>
+          // DIV-truncation contract (see Scaladoc): half-up only holds for
+          // non-negative sums; one min() over the checkpointed, node-count-
+          // sized feature table (layer 1's input) guards every layer
+          if (layer == 0) {
+            val minH = h.agg(min(col("h"))).head
+            require(minH.isNullAt(0) || minH.getLong(0) >= 0L,
+              s"neighborMeanAgg requires non-negative feature values " +
+                s"(half-up DIV identity breaks on negative sums); min = " +
+                s"${minH.getLong(0)}")
+          }
+          layer += 1
+          // every node rides the aggregate as a null-valued base row from
+          // the checkpointed node table: sum/count ignore the null, so a
+          // node with no valued in-neighbors keeps n = 0 and emits NULL —
+          // exactly the old left join's semantics, one exchange per layer
+          // instead of an aggregate plus a node-table join (guide §2.4)
+          e.join(h, e("src") === h("id"))
+            .select(e("dst").as("id"), col("h"))
+            .unionAll(nodes.df.select(col("id"), lit(null).cast("long").as("h")))
+            .groupBy("id")
+            .agg(
+              sum(col("h").cast("decimal(38,0)")).as("sd"),
+              count(col("h")).as("n"))
+            .select(col("id"),
+              when(col("n") > 0,
+                expr("CAST((2 * sd + n) DIV (2 * n) AS BIGINT)")).as("h"))
+        }
+      } finally nodes.release()
     } finally e.unpersist(blocking = false)
   }
 
@@ -794,19 +716,19 @@ object Graph {
    * Scale shape: the edge list is cached TWICE, hash-partitioned on
    * src and on dst, because each round joins it from both sides — the
    * per-round shuffles then touch only the node-sized score tables
-   * (pageRank's shape, mirrored). Each half-step's RAW sums are
-   * localCheckpoint-ed before the max scalar is read, so the edge
-   * join+aggregate materializes once per half-step and the normalized
-   * projection is a narrow map over the checkpoint; superseded rounds
-   * are dropped immediately. Output: one
+   * (pageRank's shape, mirrored). Each half-step's RAW sums are cut
+   * ([[graft.util.Lineage.cut]]) before the max scalar is read, so the
+   * edge join+aggregate materializes once per half-step and the
+   * normalized projection is a narrow map over the cut; a half-step's
+   * superseded cut is released as soon as its successor exists. Two
+   * live states per round, so the cuts are held here rather than through
+   * [[graft.util.Lineage.iterate]]. Output: one
    * row per node, hub_scaled for src-side nodes, auth_scaled for
    * dst-side, zero where a node plays no such role.
    */
   def hits(edges: DataFrame, iterations: Int, scale: Long): DataFrame = {
     require(iterations >= 1 && scale >= 1, "need iterations and a positive scale")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val st = new RoundState(sc)
     // cache the raw construction once and size the round width to the
     // data (dataWidth — the r17 scaling fix); the count doubles as the
     // empty-graph gate AND the deliberate full cache fill the r16 advice
@@ -821,17 +743,17 @@ object Graph {
     // caller's edge construction — a join + distinct at the catalog
     // fixture — materializes once, not three times
     val eDst = eSrc.repartition(width, col("dst")).persist()
-    var labelIds = Set.empty[Int]
-    var authIds = Set.empty[Int]
+    var hubCut = Option.empty[Cut]
+    var authCut = Option.empty[Cut]
     try {
       require(nEdges > 0, "empty graph")
       eSrc.count()
       e0.unpersist(blocking = false)
-      // The RAW half-step (edge join + sum) is checkpointed FIRST;
-      // both consumers — the max scalar and the normalized projection
-      // the next half-step joins against — then read the materialized
+      // The RAW half-step (edge join + sum) is cut FIRST; both
+      // consumers — the max scalar and the normalized projection the
+      // next half-step joins against — then read the materialized
       // frame, so each half-step's join+aggregate runs exactly once
-      // per round (not once for the max and again at the next save).
+      // per round (not once for the max and again at the next cut).
       def normalize(rawCp: DataFrame, side: String): DataFrame = {
         val maxRaw = rawCp.agg(max(col("raw"))).head.getLong(0)
         val bound = try Math.multiplyExact(scale, maxRaw)
@@ -843,30 +765,25 @@ object Graph {
           floor((col("raw") * scale).cast("double") / maxRaw.toDouble)
             .cast("long").as("r"))
       }
-      var hubs = {
-        val s0 = st.save(eSrc.select(col("src").as("id")).distinct()
-          .select(col("id"), lit(scale).as("r")))
-        labelIds = s0._2; s0._1
+      // the fresh cut replaces (and releases) its predecessor BEFORE
+      // normalize can throw (its 2^53 bound require), so the error path
+      // below always holds exactly the live cuts
+      def advance(live: Option[Cut], df: DataFrame): Option[Cut] = {
+        val next = Lineage.cut(df)
+        live.foreach(_.release())
+        Some(next)
       }
+      hubCut = advance(hubCut, eSrc.select(col("src").as("id")).distinct()
+        .select(col("id"), lit(scale).as("r")))
+      var hubs = hubCut.get.df
       var auths: DataFrame = null
       (1 to iterations).foreach { _ =>
-        val aRaw = eSrc.join(hubs, eSrc("src") === hubs("id"))
-          .groupBy(eSrc("dst").as("id")).agg(sum(col("r")).as("raw"))
-        val (aRawCp, aIds) = st.save(aRaw)
-        // Take ownership of the fresh checkpoint ids BEFORE normalize can
-        // throw (its 2^53 bound require): if they were assigned only
-        // after, the error path's st.drop(labelIds ++ authIds) would
-        // still hold the PREVIOUS (already-dropped) set and the fresh
-        // checkpoint's cached blocks would leak.
-        val prevAuth = authIds; authIds = aIds
-        st.drop(prevAuth)
-        auths = normalize(aRawCp, "authority")
-        val hRaw = eDst.join(auths, eDst("dst") === auths("id"))
-          .groupBy(eDst("src").as("id")).agg(sum(col("r")).as("raw"))
-        val (hRawCp, hIds) = st.save(hRaw)
-        val prevHub = labelIds; labelIds = hIds
-        st.drop(prevHub)
-        hubs = normalize(hRawCp, "hub")
+        authCut = advance(authCut, eSrc.join(hubs, eSrc("src") === hubs("id"))
+          .groupBy(eSrc("dst").as("id")).agg(sum(col("r")).as("raw")))
+        auths = normalize(authCut.get.df, "authority")
+        hubCut = advance(hubCut, eDst.join(auths, eDst("dst") === auths("id"))
+          .groupBy(eDst("src").as("id")).agg(sum(col("r")).as("raw")))
+        hubs = normalize(hubCut.get.df, "hub")
       }
       hubs.select(col("id"), col("r").as("hub_scaled"))
         .join(auths.select(col("id"), col("r").as("auth_scaled")),
@@ -875,7 +792,7 @@ object Graph {
           coalesce(col("hub_scaled"), lit(0L)).as("hub_scaled"),
           coalesce(col("auth_scaled"), lit(0L)).as("auth_scaled"))
     } catch {
-      case err: Throwable => st.drop(labelIds ++ authIds); throw err
+      case err: Throwable => (hubCut ++ authCut).foreach(_.release()); throw err
     } finally {
       e0.unpersist(blocking = false)
       eSrc.unpersist(blocking = false)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Lineage
+
 /**
  * BPE-STYLE TOKENIZER TRAINING (byte-pair-encoding merge induction,
  * Sennrich et al. 2016) — the tokenizer-training pass every LLM data
@@ -106,13 +108,12 @@ object Tokenizer {
     // initial segmentation: one symbol per character. split(word, "")
     // can yield empty-string edge elements depending on the regex
     // engine's split contract — filter them out rather than rely on it.
-    val seg0 = vocab.select(col("word"), col("cnt"),
+    // vocab-bounded table iterated `rounds` times: truncate the
+    // corpus-shuffle lineage once so no round replays the corpus scan
+    val seg0 = Lineage.cut(vocab.select(col("word"), col("cnt"),
       concat(lit("|"),
         array_join(filter(split(col("word"), ""), x => x =!= ""), "||"),
-        lit("|")).as("seg"))
-      // vocab-bounded table iterated `rounds` times: truncate the
-      // corpus-shuffle lineage once so no round replays the corpus scan
-      .localCheckpoint()
+        lit("|")).as("seg"))).df
 
     var seg = seg0
     val merges = Seq.newBuilder[Merge]

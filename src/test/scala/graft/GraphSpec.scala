@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
@@ -399,5 +401,38 @@ class GraphSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(walkReliable == walkLocal)
     } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
+  test("round loops keep only their result's cuts persisted, and none on failure") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // a returned frame reads its final cuts through LogicalRDD leaves;
+    // anything else a loop leaves persisted is a leak
+    def keepsOnlyItsCuts(name: String)(run: => DataFrame): Unit = {
+      val before = persisted
+      val out = run
+      val leaves = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      assert(leaves.nonEmpty, s"$name must return a frame over its final cut")
+      assert(persisted -- before == leaves.map(_.id).toSet, name)
+      leaves.foreach(_.unpersist(blocking = false))
+    }
+    def leavesNothing(name: String)(run: => Any): Unit = {
+      val before = persisted
+      intercept[Exception](run)
+      assert((persisted -- before).isEmpty, s"$name failed and leaked blocks")
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
+    val edges = undirected(pairs)
+    val canonical = pairs.toDF("a", "b")
+    keepsOnlyItsCuts("pageRank")(Graph.pageRank(edges, 4))
+    keepsOnlyItsCuts("labelPropagation")(Graph.labelPropagation(edges, 4))
+    keepsOnlyItsCuts("neighborMeanAgg")(Graph.neighborMeanAgg(edges,
+      Seq((1L, 5L), (4L, 9L)).toDF("id", "x"), 3))
+    keepsOnlyItsCuts("kCore")(Graph.kCore(canonical, k = 2, maxRounds = 6))
+    keepsOnlyItsCuts("seedDistance")(Graph.seedDistance(edges, Seq(1L).toDF("id"), 3))
+    keepsOnlyItsCuts("hits")(Graph.hits(pairs.toDF("src", "dst"), 3, 1000L))
+    // the cascade needs 4 rounds; hits' first authority max is 2 * scale,
+    // so scale * max overflows the 2^53 bound
+    leavesNothing("kCore non-convergence")(Graph.kCore(canonical, k = 2, maxRounds = 2))
+    leavesNothing("hits 2^53 bound")(Graph.hits(pairs.toDF("src", "dst"), 3, 1L << 40))
   }
 }
