@@ -24,19 +24,10 @@ import graft.util.Json.quote
  *    must not be treated as an official number (the r4/r5 official
  *    benches were both contaminated exactly this way — 2-4x uniform
  *    swings on unchanged code);
- *  - DUAL CONFIG: the round-over-round series historically mixed two
- *    configs (officials at cpus=32, the BENCH_NOTES reference series at
- *    local[4] — e4 measures 2.9 s vs 5.4 s between them purely from
- *    fixed per-stage overhead at 32 shuffle partitions on tiny data).
- *    After the primary run the bench now re-runs the suite on a fresh
- *    local[ALT] session in the same JVM (same protocol) and reports it
- *    under "alt" in the SAME JSON line, so both series continue every
- *    round. SPARK_GRAFT_ALT=0 skips; SPARK_GRAFT_ALT_CPUS overrides the
- *    default (4 when the primary is not 4, else 32);
  *  - DEGRADED MODE: if the host is contended at start, the bench drops
- *    to reps=1 with no alt series and tags the artifact
- *    "degraded":true — an imprecise artifact beats round 13's
- *    rc=124/parsed-null nothing. SPARK_GRAFT_DEGRADE=0 disables;
+ *    to reps=1 and tags the artifact "degraded":true — an imprecise
+ *    artifact beats round 13's rc=124/parsed-null nothing.
+ *    SPARK_GRAFT_DEGRADE=0 disables;
  *  - INCREMENTAL EMISSION: parseable partial summary lines print every
  *    25 timed queries and at end-of-primary, so a timeout at any point
  *    after warm-up still leaves a valid (tagged "partial") JSON line
@@ -50,24 +41,24 @@ import graft.util.Json.quote
  *    segment above max(1, limit/2) external cores. Validated against
  *    deliberate busy-loop competitors (2 spinners -> 1.95-1.98
  *    measured);
- *  - TIME BUDGET (round 16 — the r13/r14/r15 official artifacts were
- *    all lost to the protocol outgrowing the driver's timeout: the
- *    full warm-up + 3 reps + alt series costs ~8 suite-passes and the
- *    suite is now ~350-470 s/pass, while the r15 kill timestamps put
- *    the driver budget at ~2700-2800 s). SPARK_GRAFT_TIME_BUDGET_SECS
- *    (default 2400, conservative vs the observed kill; 0 disables)
- *    bounds the WHOLE run: after the warm-up pass its wall time is a
- *    per-pass estimate, and the timed reps are capped so warm-up +
- *    reps fits 0.8x budget ("reps" in the artifact is the EFFECTIVE
- *    count, "reps_requested" the configured one); the alt series runs
- *    only if its projection (per-pass x (reps+1) x 1.2) fits 0.9x
- *    budget, else "alt":"skipped_budget". The FINAL summary line
- *    prints immediately after the primary series either way, and is
- *    RE-EMITTED every 25 alt queries so a kill at any point leaves a
- *    parseable line in the driver's ~2000-char tail window. With
- *    reps capped at 2, the reported statistic is min-of-2 (timing
- *    noise is strictly additive, so min is the better central
+ *  - TIME BUDGET (the r13/r14/r15 official artifacts were all lost to
+ *    the protocol outgrowing the driver's timeout: the suite is
+ *    ~350-470 s/pass, while the r15 kill timestamps put the driver
+ *    budget at ~2700-2800 s). SPARK_GRAFT_TIME_BUDGET_SECS (default
+ *    2400, conservative vs the observed kill; 0 disables) bounds the
+ *    WHOLE run: after the warm-up pass its wall time is a per-pass
+ *    estimate, and the timed reps are capped so warm-up + reps fits
+ *    0.8x budget ("reps" in the artifact is the EFFECTIVE count,
+ *    "reps_requested" the configured one). A full-precision summary
+ *    line prints as soon as the timed passes end, before the contended
+ *    rerun. With reps capped at 2, the reported statistic is min-of-2
+ *    (timing noise is strictly additive, so min is the better central
  *    estimate); at 3+ it is the true median as before.
+ *
+ * Sessions come from [[Sessions.local]] and the between-query cleanup is
+ * [[Sessions.reap]]. The "alt", "alt_total" and "alt_cpus" keys of the
+ * output always read null: they are kept so the key set of every line
+ * stays the same.
  */
 object Bench {
   private def load1m: Double =
@@ -97,64 +88,6 @@ object Bench {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1e9
       case _ => -1.0
     }
-
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-mode knob: the sf0.1 parquet files are single small splits,
-      // which would serialize CPU-bound per-row operators (hashing,
-      // signatures) onto one core. Splitting at 16 KiB plans one split per
-      // local core for the ~600 KB documents file, but a parquet split
-      // holds whole row groups and the file is ONE row group, so all its
-      // rows still land in one split; Tables.documents redistributes such
-      // a scan to the planned split count. At real scale inputs arrive as
-      // thousands of splits and these two settings are left at their
-      // defaults.
-      .config("spark.sql.files.openCostInBytes", "16384")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      // the whole-stage-codegen class cache is JVM-GLOBAL and defaults to
-      // 100 entries; a 210-query suite generates thousands of distinct
-      // codegen'd stages, so late-suite queries evict early ones and every
-      // repetition recompiles (janino) and re-JITs INSIDE the timers —
-      // part of the documented late-suite wobble class (BENCH_NOTES). At
-      // ~50 KB per cached class this is ~200 MB of the 48 GB heap. A
-      // long-lived production session running a diverse query mix wants
-      // the same headroom; it is not a local[32]-only knob.
-      // Round 17: parameterised for the A/B the r16 verdict asked for
-      // (the raise landed without a clean measurement).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // NO eager shuffle-file cleanup — measured HARMFUL here (round 14).
-      // History: round 13 set the unprefixed fileCleanup key against the
-      // late-suite wobble, but since Spark 4.1 that spelling is only the
-      // deprecated alias of the CONNECT config; classic sessions read
-      // spark.sql.classic.shuffleDependency.fileCleanup.enabled, so the
-      // flag was INERT and the ±8 s stability measured that round came
-      // from the explicit unpersist+gc reaper in runOnce below. Round 14
-      // set the classic key for real and the iteration-class entries
-      // blew up 3-8x (c9 7->57.7 s, g10 6.5->18.6, g1/g4/l16 all
-      // elevated; BENCH_NOTES has the capture): those operators run many
-      // actions over the SAME DataFrames per query, and Spark reuses the
-      // earlier actions' map outputs via MapOutputTracker — eager
-      // per-execution deletion throws that reuse away and every round
-      // recomputes its predecessors' shuffles. The reaper in runOnce
-      // (outside the timers) remains the wobble cure; the flag stays OFF.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The runOnce reaper's unpersist of locally-checkpointed RDDs makes
-    // org.apache.spark.rdd emit one "lineage has been truncated" WARN
-    // per RDD — thousands per suite. That spam is exactly what filled
-    // the driver's ~2000-char tail window in the r15 artifact (rc=124,
-    // tail 100% MapPartitionsRDD WARNs, summary line pushed out). The
-    // unpersist is deliberate (cleanup outside the timers), so the
-    // warning carries no information here: silence the package.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
 
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
@@ -187,14 +120,13 @@ object Bench {
     }
     val loadBefore = load1m
     // DEGRADED MODE (the round-13 lesson: the official BENCH_r13.json is
-    // rc=124/parsed-null because the full protocol — warm-up + 3 reps +
-    // a whole second alt-config series — did not fit the driver's budget
-    // on a host already running another job at load 8.47). Timings taken
-    // under contention are unreliable ANYWAY (that is what the load guard
-    // is for), so when the host is busy at start the bench trades the
-    // precision it cannot have for the artifact it must produce: reps=1,
-    // no alt series, tagged "degraded":true. SPARK_GRAFT_DEGRADE=0 forces
-    // the full protocol regardless of load.
+    // rc=124/parsed-null because the full protocol did not fit the
+    // driver's budget on a host already running another job at load
+    // 8.47). Timings taken under contention are unreliable ANYWAY (that
+    // is what the load guard is for), so when the host is busy at start
+    // the bench trades the precision it cannot have for the artifact it
+    // must produce: reps=1, tagged "degraded":true. SPARK_GRAFT_DEGRADE=0
+    // forces the full protocol regardless of load.
     val degraded = loadBefore > loadLimit &&
       sys.env.getOrElse("SPARK_GRAFT_DEGRADE", "1") != "0"
     // an EXPLICIT SPARK_GRAFT_REPS wins even in degraded mode (a caller
@@ -206,12 +138,8 @@ object Bench {
       r.toInt
     }.getOrElse(if (degraded) 1 else 3)
     // explicit SPARK_GRAFT_REPS also opts out of the budget cap on reps
-    // (a caller who pinned reps wants exactly that count) — the budget
-    // then only gates the alt series
+    // (a caller who pinned reps wants exactly that count)
     val repsPinned = sys.env.contains("SPARK_GRAFT_REPS")
-    val altEnabled = !degraded && sys.env.getOrElse("SPARK_GRAFT_ALT", "1") != "0"
-    val altCpus = sys.env.getOrElse("SPARK_GRAFT_ALT_CPUS",
-      if (cpus == "4") "32" else "4")
     // dev-only: SPARK_GRAFT_ONLY=q1,q2 restricts the run while iterating.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = graft.queries.Catalog.all
@@ -243,106 +171,32 @@ object Bench {
         .map(_.getUsage.getUsed).sum / (1024 * 1024)
     }
 
-    def runOnce(spark: SparkSession, errKey: String,
-        name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def runOnce(spark: SparkSession, q: graft.queries.Q, errKey: String): Double = {
       val gc0 = if (qlog) gcMillis else 0L
       val jit0 = if (qlog) jitMillis else 0L
       val cpu0 = if (qlog) ownCpuSecs else 0.0
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).count()
+        q.run(spark, sfDir).count()
         val secs = (System.nanoTime() - t0) / 1e9
         if (qlog) {
           val heapMb = (Runtime.getRuntime.totalMemory() -
             Runtime.getRuntime.freeMemory()) / (1024 * 1024)
-          System.err.println(f"[qlog] $name%-28s ${secs}%7.2f s  cpu=${ownCpuSecs - cpu0}%7.1f s  gc=${gcMillis - gc0}%5d ms  jit=${jitMillis - jit0}%6d ms  code=${poolUsedMb("CodeHeap")}%4d MB  meta=${poolUsedMb("Metaspace")}%5d MB  heap=${heapMb}%6d MB")
+          System.err.println(f"[qlog] ${q.name}%-28s ${secs}%7.2f s  cpu=${ownCpuSecs - cpu0}%7.1f s  gc=${gcMillis - gc0}%5d ms  jit=${jitMillis - jit0}%6d ms  code=${poolUsedMb("CodeHeap")}%4d MB  meta=${poolUsedMb("Metaspace")}%5d MB  heap=${heapMb}%6d MB")
         }
         secs
       } catch {
         case e: Throwable =>
-          // alt-series failures are keyed "alt:<query>" so an official-run
-          // failure is never confused with a local[4]-only one
+          // contended-rerun failures are keyed "rerun:<query>" so they are
+          // never confused with the primary series' own
           errors.getOrElseUpdate(errKey,
             Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
           -1.0
-      } finally {
-        spark.catalog.clearCache()
-        // Leftover persisted blocks (e.g. an operator's final eager
-        // checkpoint, which has no recompute path and so must stay alive
-        // for its caller) and GC-driven broadcast/shuffle cleanup both
-        // otherwise land INSIDE a later query's timer — measured as 2-4x
-        // swings on whichever heavy query happened to absorb the cleanup.
-        // Reap them here, outside all timers.
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-        // ContextCleaner drains its reference queue ASYNCHRONOUSLY after
-        // the gc — give it a beat so broadcast/shuffle removals don't
-        // spill into the next query's timer.
-        Thread.sleep(150)
-      }
+      } finally Sessions.reap(spark)
     }
 
     def r2(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-
-    /** warm-up pass + timed passes on a fresh session → per-query
-      * medians + the per-25-query EXTERNAL-cpu profile (competing cores
-      * during each timed segment; see busySecs). `repsFor(warmSecs)` is
-      * called once, after the warm-up pass, with that pass's wall time —
-      * the per-pass cost estimate the budget cap is computed from.
-      * `onProgress(nDone, runningTotal)` fires after each query's median
-      * lands (the pass order is query-major, so a median is final as
-      * soon as its reps finish). Returns (medians, extSegs, repsUsed,
-      * warmSecs). With repsUsed=2 the statistic is min-of-2 (index
-      * (size-1)/2 — identical to the median at any odd count). */
-    def series(nCpus: String, errPrefix: String, repsFor: Double => Int,
-        onProgress: (Int, Double) => Unit = (_, _) => ())
-        : (Seq[(String, Double)], Seq[Double], Int, Double) = {
-      val spark = buildSession(nCpus)
-      try {
-        val warmT0 = System.nanoTime()
-        selected.zipWithIndex.foreach { case (q, i) => // warm-up, untimed
-          runOnce(spark, errPrefix + q.name, q.name, q.run)
-          // stderr only: a stdout line with no real total could be the
-          // tail-window line a timed-out run gets parsed from
-          if ((i + 1) % 50 == 0)
-            System.err.println(s"[bench] warm-up ${i + 1}/${selected.size}")
-        }
-        val warmSecs = (System.nanoTime() - warmT0) / 1e9
-        val nReps = math.max(1, repsFor(warmSecs))
-        var running = 0.0
-        val segs = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var (w0, b0, o0) = (System.nanoTime(), busySecs, ownCpuSecs)
-        val medians = selected.zipWithIndex.map { case (q, i) =>
-          val ts = (1 to nReps).map(_ => runOnce(spark, errPrefix + q.name, q.name, q.run))
-          val med = if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply((ts.size - 1) / 2)
-          if (med >= 0) running += med
-          if ((i + 1) % 25 == 0 || i + 1 == selected.size) {
-            val (w1, b1, o1) = (System.nanoTime(), busySecs, ownCpuSecs)
-            val wall = (w1 - w0) / 1e9
-            segs += (if (wall > 0 && b0 >= 0 && b1 >= 0 && o0 >= 0 && o1 >= 0)
-              math.max(0.0, ((b1 - b0) - (o1 - o0)) / wall) else -1.0)
-            w0 = w1; b0 = b1; o0 = o1
-          }
-          onProgress(i + 1, running)
-          q.name -> med
-        }
-        (medians, segs.toSeq, nReps, warmSecs)
-      } finally spark.stop()
-    }
-    def toJson(medians: Seq[(String, Double)]): (Double, String) = {
-      val total = medians.collect { case (_, v) if v >= 0 => v }.sum
-      (total, medians.map { case (k, v) => s"${quote(k)}:$v" }.mkString("{", ",", "}"))
-    }
-    def extJson(segs: Seq[Double]): (String, String, Boolean) = {
-      val valid = segs.filter(_ >= 0)
-      val mx = if (valid.isEmpty) -1.0 else valid.max
-      // tighter than the start guard: even a couple of EXTERNAL cores
-      // skews the iteration class (the r14/r15 elevations), and the
-      // measurement has ~0.1-core noise, so half the limit, floor 1.0
-      (segs.map(r2).mkString("[", ",", "]"), r2(mx),
-        mx > math.max(1.0, loadLimit / 2))
-    }
 
     // INCREMENTAL EMISSION: every 25 timed queries, print a small but
     // fully parseable summary line (running total, n_queries done so
@@ -351,83 +205,81 @@ object Bench {
     // of nothing (round 13's artifact was rc=124/parsed-null); on a
     // clean finish the final complete line is printed last and wins.
     var effReps = repsRequested
-    val (primary, extSegs, _, warmPrimary) = series(cpus, "", { warmSecs =>
-      // BUDGET CAP on reps: the warm-up pass wall time is the per-pass
-      // estimate (slightly conservative — warm-up pays JIT); cap the
-      // timed passes so warm-up + reps fits 0.8x the budget.
-      effReps = if (repsPinned || timeBudget <= 0) repsRequested
-      else {
-        val fit = ((timeBudget * 0.8 - elapsedSecs) / math.max(1.0, warmSecs)).toInt
-        val r = math.max(1, math.min(repsRequested, fit))
-        if (r < repsRequested) System.err.println(
-          f"[bench] budget cap: warm-up $warmSecs%.0f s, elapsed $elapsedSecs%.0f of ${timeBudget}s — reps $repsRequested -> $r")
-        r
-      }
-      effReps
-    }, (done, running) =>
-      if (done % 25 == 0 && done < selected.size) {
-        println(s"""{"metric":"total","value":${r2(running)},"unit":"sec","sf":"$sfDir","reps":$effReps,"cpus":$cpus,"n_queries":$done,"n_total":${selected.size},"n_errors":${errors.size},"partial":true,"degraded":$degraded,"load_before":$loadBefore}""")
-        Console.out.flush()
-      })
-    val (total, qs) = toJson(primary)
-    val (extArr, extMax, extContended) = extJson(extSegs)
-    // ALT GATING: run the alt series only if its projected cost (per-
-    // pass estimate x (reps+1) passes x 1.2 config margin) fits inside
-    // 0.9x the remaining budget — the r15 official run died exactly
-    // here, mid-alt. When dropped, "alt":"skipped_budget".
-    val altProjected = warmPrimary * (effReps + 1) * 1.2
-    val altFits = timeBudget <= 0 || elapsedSecs + altProjected <= timeBudget * 0.9
-    if (altEnabled && !altFits) System.err.println(
-      f"[bench] alt series skipped: elapsed $elapsedSecs%.0f s + projected $altProjected%.0f s " +
-        f"exceeds 0.9 x ${timeBudget}s budget")
-    val altRun = altEnabled && altFits
+    // per-25-query EXTERNAL-cpu profile: competing cores during each
+    // timed segment (see busySecs)
+    val extSegs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val primary = {
+      val spark = Sessions.local(cpus)
+      try {
+        val warmT0 = System.nanoTime()
+        selected.zipWithIndex.foreach { case (q, i) => // warm-up, untimed
+          runOnce(spark, q, q.name)
+          // stderr only: a stdout line with no real total could be the
+          // tail-window line a timed-out run gets parsed from
+          if ((i + 1) % 50 == 0)
+            System.err.println(s"[bench] warm-up ${i + 1}/${selected.size}")
+        }
+        val warmSecs = (System.nanoTime() - warmT0) / 1e9
+        // BUDGET CAP on reps: the warm-up pass wall time is the per-pass
+        // estimate (slightly conservative — warm-up pays JIT); cap the
+        // timed passes so warm-up + reps fits 0.8x the budget.
+        effReps = if (repsPinned || timeBudget <= 0) repsRequested
+        else {
+          val fit = ((timeBudget * 0.8 - elapsedSecs) / math.max(1.0, warmSecs)).toInt
+          val r = math.max(1, math.min(repsRequested, fit))
+          if (r < repsRequested) System.err.println(
+            f"[bench] budget cap: warm-up $warmSecs%.0f s, elapsed $elapsedSecs%.0f of ${timeBudget}s — reps $repsRequested -> $r")
+          r
+        }
+        val nReps = math.max(1, effReps)
+        var running = 0.0
+        var (w0, b0, o0) = (System.nanoTime(), busySecs, ownCpuSecs)
+        // the pass order is query-major, so a median is final as soon as
+        // its reps finish. With nReps=2 the statistic is min-of-2 (index
+        // (size-1)/2 — identical to the median at any odd count).
+        selected.zipWithIndex.map { case (q, i) =>
+          val ts = (1 to nReps).map(_ => runOnce(spark, q, q.name))
+          val med = if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply((ts.size - 1) / 2)
+          if (med >= 0) running += med
+          if ((i + 1) % 25 == 0 || i + 1 == selected.size) {
+            val (w1, b1, o1) = (System.nanoTime(), busySecs, ownCpuSecs)
+            val wall = (w1 - w0) / 1e9
+            extSegs += (if (wall > 0 && b0 >= 0 && b1 >= 0 && o0 >= 0 && o1 >= 0)
+              math.max(0.0, ((b1 - b0) - (o1 - o0)) / wall) else -1.0)
+            w0 = w1; b0 = b1; o0 = o1
+          }
+          if ((i + 1) % 25 == 0 && i + 1 < selected.size) {
+            println(s"""{"metric":"total","value":${r2(running)},"unit":"sec","sf":"$sfDir","reps":$effReps,"cpus":$cpus,"n_queries":${i + 1},"n_total":${selected.size},"n_errors":${errors.size},"partial":true,"degraded":$degraded,"load_before":$loadBefore}""")
+            Console.out.flush()
+          }
+          q.name -> med
+        }
+      } finally spark.stop()
+    }
+    val total = primary.collect { case (_, v) if v >= 0 => v }.sum
+    val qs = primary.map { case (k, v) => s"${quote(k)}:$v" }.mkString("{", ",", "}")
+    val extArr = extSegs.map(r2).mkString("[", ",", "]")
+    val extPeak = extSegs.filter(_ >= 0).maxOption.getOrElse(-1.0)
+    val extMax = r2(extPeak)
+    // tighter than the start guard: even a couple of EXTERNAL cores
+    // skews the iteration class (the r14/r15 elevations), and the
+    // measurement has ~0.1-core noise, so half the limit, floor 1.0
+    val extContended = extPeak > math.max(1.0, loadLimit / 2)
     // primary complete: emit a full-precision summary NOW (stdout line +
-    // BENCH_FULL.json), before the alt/rerun phases — a timeout inside
-    // THOSE no longer costs the round its primary result. The clean-
-    // finish path overwrites both with the complete version below, and
-    // the alt phase RE-EMITS this line every 25 queries so it is always
-    // inside the driver's tail window even if the run is killed mid-alt.
+    // BENCH_FULL.json), before the contended rerun — a timeout inside it
+    // no longer costs the run its primary result. The clean-finish path
+    // overwrites both with the complete version below.
     val slowest25 = primary.sortBy(-_._2).take(25)
       .map { case (k, v) => s"${quote(k)}:${r2(v)}" }.mkString("{", ",", "}")
-    val postPrimaryLine = s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"n_queries":${primary.size},"n_errors":${errors.size},"queries":$slowest25,"alt_total":null,"partial":$altRun,"degraded":$degraded,"load_before":$loadBefore,"ext_load_max":$extMax,"contended_midsuite":$extContended,"time_budget_secs":$timeBudget,"full":"BENCH_FULL.json"}"""
-    println(postPrimaryLine)
+    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"n_queries":${primary.size},"n_errors":${errors.size},"queries":$slowest25,"alt_total":null,"partial":false,"degraded":$degraded,"load_before":$loadBefore,"ext_load_max":$extMax,"contended_midsuite":$extContended,"time_budget_secs":$timeBudget,"full":"BENCH_FULL.json"}""")
     Console.out.flush()
     locally {
       val errJsonNow = errors.map { case (k, v) => s"${quote(k)}:${quote(v)}" }
         .mkString("{", ",", "}")
-      val primaryLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"alt":null,"errors":$errJsonNow,"load_before":$loadBefore,"ext_load":$extArr,"ext_load_max":$extMax,"contended_midsuite":$extContended,"degraded":$degraded,"time_budget_secs":$timeBudget,"partial":$altRun}"""
+      val primaryLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"alt":null,"errors":$errJsonNow,"load_before":$loadBefore,"ext_load":$extArr,"ext_load_max":$extMax,"contended_midsuite":$extContended,"degraded":$degraded,"time_budget_secs":$timeBudget,"partial":false}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         primaryLine.getBytes("UTF-8"))
       catch { case e: Throwable => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
-    }
-    // the alt series must NEVER cost the primary result its JSON line —
-    // a bad SPARK_GRAFT_ALT_CPUS or a session that fails to start is
-    // reported inside "alt", not thrown past the println
-    // altCpus comes from an env var: quote it unless it's a plain number,
-    // or a value like "*" would corrupt the JSON line
-    val altCpusJson = if (altCpus.nonEmpty && altCpus.forall(_.isDigit)) altCpus
-      else quote(altCpus)
-    var altTotalOpt: Option[Double] = None
-    val altJson = if (!altEnabled) "null"
-    else if (!altFits) "\"skipped_budget\""
-    else {
-      try {
-        val (altMedians, altSegs, _, _) = series(altCpus, "alt:", _ => effReps,
-          (done, _) => if (done % 25 == 0 && done < selected.size) {
-            // keep a parseable (and the LATEST) summary inside the tail
-            // window throughout the alt phase
-            println(postPrimaryLine)
-            Console.out.flush()
-          })
-        val (altTotal, altQs) = toJson(altMedians)
-        val (_, altExtMax, _) = extJson(altSegs)
-        altTotalOpt = Some(altTotal)
-        s"""{"cpus":$altCpusJson,"total":$altTotal,"ext_load_max":$altExtMax,"queries":$altQs}"""
-      } catch {
-        case e: Throwable =>
-          s"""{"cpus":$altCpusJson,"error":${quote(
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(300))}}"""
-      }
     }
     // load_after keeps its historical meaning: ambient load at END OF
     // SUITE (sampled before any self-defense rerun adds its own load)
@@ -455,11 +307,11 @@ object Bench {
         // contributes (a post-rerun sample would read ~ncpus from the
         // rerun's own work and falsely claim "still contended")
         val loadAtRerun = load1m
-        val spark = buildSession(cpus)
+        val spark = Sessions.local(cpus)
         val medians = try {
-          slowQs.foreach(q => runOnce(spark, "rerun:" + q.name, q.name, q.run))
+          slowQs.foreach(q => runOnce(spark, q, "rerun:" + q.name))
           slowQs.map { q =>
-            val ts = (1 to effReps).map(_ => runOnce(spark, "rerun:" + q.name, q.name, q.run))
+            val ts = (1 to effReps).map(_ => runOnce(spark, q, "rerun:" + q.name))
             q.name -> (if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply((ts.size - 1) / 2))
           }
         } finally spark.stop()
@@ -475,16 +327,16 @@ object Bench {
     val errJson = errors.map { case (k, v) => s"${quote(k)}:${quote(v)}" }.mkString("{", ",", "}")
     // TWO outputs, one contract. The driver captures only the TAIL of the
     // run's output (~2000 chars) and parses the JSON line out of it — the
-    // full per-query map (142 queries × two series) is ~5 KB, so the full
-    // line has NEVER survived that window (every BENCH_r*.json through r9
-    // has parsed:null). So: the COMPLETE result goes to BENCH_FULL.json
-    // (committed, full precision, both series), and stdout gets a COMPACT
+    // full per-query map (210 queries) is ~5 KB, so the full line has
+    // NEVER survived that window (every BENCH_r*.json through r9 has
+    // parsed:null). So: the COMPLETE result goes to BENCH_FULL.json
+    // (committed, full precision), and stdout gets a COMPACT
     // line — totals, counts, and the slowest-25 query map — sized to fit
     // the tail window with room for sbt's trailing [success] line.
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"alt":$altJson,"errors":$errJson,"load_before":$loadBefore,"waited_for_load":$waitedSecs,"load_after":$loadAfter,"contended":$contended,"ext_load":$extArr,"ext_load_max":$extMax,"contended_midsuite":$extContended,"degraded":$degraded,"time_budget_secs":$timeBudget,"elapsed_secs":${r2(elapsedSecs)},"contended_rerun":$rerunJson}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"alt":null,"errors":$errJson,"load_before":$loadBefore,"waited_for_load":$waitedSecs,"load_after":$loadAfter,"contended":$contended,"ext_load":$extArr,"ext_load_max":$extMax,"contended_midsuite":$extContended,"degraded":$degraded,"time_budget_secs":$timeBudget,"elapsed_secs":${r2(elapsedSecs)},"contended_rerun":$rerunJson}"""
     val fullPath = java.nio.file.Paths.get("BENCH_FULL.json")
     try java.nio.file.Files.write(fullPath, fullLine.getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
-    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"n_queries":${primary.size},"n_errors":${errors.size},"queries":$slowest25,"alt_total":${altTotalOpt.map(r2).getOrElse(if (altEnabled && !altFits) "\"skipped_budget\"" else "null")},"alt_cpus":$altCpusJson,"load_before":$loadBefore,"waited_for_load":$waitedSecs,"load_after":$loadAfter,"contended":$contended,"ext_load_max":$extMax,"contended_midsuite":$extContended,"degraded":$degraded,"time_budget_secs":$timeBudget,"elapsed_secs":${r2(elapsedSecs)},"contended_rerun":$rerunJson,"full":"BENCH_FULL.json"}""")
+    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","sf":"$sfDir","reps":$effReps,"reps_requested":$repsRequested,"cpus":$cpus,"n_queries":${primary.size},"n_errors":${errors.size},"queries":$slowest25,"alt_total":null,"alt_cpus":null,"load_before":$loadBefore,"waited_for_load":$waitedSecs,"load_after":$loadAfter,"contended":$contended,"ext_load_max":$extMax,"contended_midsuite":$extContended,"degraded":$degraded,"time_budget_secs":$timeBudget,"elapsed_secs":${r2(elapsedSecs)},"contended_rerun":$rerunJson,"full":"BENCH_FULL.json"}""")
   }
 }

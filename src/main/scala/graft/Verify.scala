@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 import graft.util.Json.quote
@@ -11,18 +10,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: plan one split per core for the small local
-      // parquet files (a single-row-group file still reads as one split;
-      // Tables.documents redistributes that scan).
-      .config("spark.sql.files.openCostInBytes", "16384")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // dev-only: SPARK_GRAFT_ONLY=q1,q2 restricts the dump while iterating
     // (the driver never sets it, so the official gate always runs all).

@@ -131,7 +131,12 @@ object Ann {
       probeRadius: Int = 1): DataFrame = {
     require(probeRadius >= 0 && probeRadius <= 2, "probeRadius must be 0, 1, or 2")
     VectorExpressions.ensureRegistered(corpus.sparkSession)
-    val bucket = V.signBucket(col("embedding"), bits)
+    // The probes read the query's bucket by name from a column computed
+    // once below the explode. Re-embedding the whole signBucket
+    // expression in each of the 1 + bits + C(bits,2) probes pushes the
+    // query side's generated code past janino's 64 KB limit, and the
+    // stage then runs interpreted.
+    val bucket = col("qbucket")
     def flipBit(b: Column, i: Int): Column =
       concat(substring(b, 1, i),
         when(substring(b, i + 1, 1) === "1", lit("0")).otherwise(lit("1")),
@@ -142,8 +147,8 @@ object Ann {
       case _ => for (i <- 0 until bits; j <- (i + 1) until bits)
         yield flipBit(flipBit(bucket, i), j)
     }
-    val probes = array(probeCols: _*)
-    val q = querySide(queries, explode(probes).as("qb"))
+    val q = querySide(queries, V.signBucket(col("embedding"), bits).as("qbucket"))
+      .select(col("query_id"), col("qv"), col("qn"), explode(array(probeCols: _*)).as("qb"))
     val c = corpusSide(corpus, V.signBucket(col("embedding"), bits).as("cb"))
     val joined = c.join(broadcast(q),
       col("qb") === col("cb") && col("query_id") =!= col("cand_id"))

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Dev-only: bit-compare two Verify output dirs (args: dirA dirB name...).
   * Canonicalizes exactly like the driver's gate: columns sorted by name,
@@ -10,10 +11,7 @@ import org.apache.spark.sql.functions._
 object CompareDumps {
   def main(args: Array[String]): Unit = {
     val Array(dirA, dirB, names @ _*) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("8")
     def canon(path: String): Seq[String] = {
       val df = spark.read.parquet(path)
       val cols = df.columns.sorted.toSeq

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /**
  * Dev-only plan auditor (not part of the engine): prints a physical-plan
@@ -12,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("4")
     // l5 intentionally broadcast-cross-joins the tiny query set against the
     // corpus scan (non-equi self-exclusion makes it a BroadcastNestedLoop).
     // l8's IVF build scores corpus x broadcast(centroids) the same way —

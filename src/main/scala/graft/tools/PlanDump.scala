@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /**
  * Dev-only: write `.explain("formatted")` for the named catalog queries
@@ -24,14 +24,7 @@ object PlanDump {
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.openCostInBytes", "16384")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = graft.queries.Catalog.byName(name).run(spark, d)
@@ -40,8 +33,7 @@ object PlanDump {
       Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
         txt.getBytes("UTF-8"))
       println(s"[plandump] wrote $outDir/${name}_$suffix.txt (${txt.length} chars)")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Sessions.reap(spark)
     }
     spark.stop()
   }

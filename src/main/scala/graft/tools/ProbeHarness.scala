@@ -2,31 +2,16 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
+
 /**
- * Shared measurement harness for the adversarial probes ([[ScaleProbe]],
- * [[SkewProbe]]) — ONE copy of the session knobs and the timing protocol
- * so every probe series measures under exactly the protocol the bench
- * it is compared against uses (Bench.scala documents the rationale for
- * each step: explicit shuffle width, split-spreading file knobs,
- * cleanup OUTSIDE the timers, median-of-reps after an untimed warm-up).
+ * Shared timing protocol for the adversarial probes ([[ScaleProbe]],
+ * [[SkewProbe]]). The probes get their session from [[graft.Sessions]]
+ * and clean up between runs with [[graft.Sessions.reap]], exactly as the
+ * bench does, so a probe series measures under the bench's protocol:
+ * cleanup OUTSIDE the timers, median-of-reps after an untimed warm-up.
  */
 private[tools] object ProbeHarness {
-
-  def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.openCostInBytes", "16384")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      // NO eager shuffle-file cleanup — measured 3-8x harmful to the
-      // iteration-class entries (cross-action map-output reuse is load-
-      // bearing there); see Bench.buildSession for the full history.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Probe list from `envVar` (comma-separated) or `default`, validated
     * against the catalog UP FRONT — a typo'd name must fail before any
@@ -41,17 +26,15 @@ private[tools] object ProbeHarness {
     names
   }
 
-  /** Untimed warm-up + `reps` timed runs → median; cache/persisted-block
-    * reaping and the GC beat happen OUTSIDE the timers (see Bench). */
+  /** Untimed warm-up + `reps` timed runs → median; [[Sessions.reap]]
+    * runs OUTSIDE the timers. */
   def medianTime(spark: SparkSession, name: String, dir: String, reps: Int): Double = {
     val q = graft.queries.Catalog.byName(name)
     def once(): Double = {
       val t0 = System.nanoTime()
       q.run(spark, dir).count()
       val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc(); Thread.sleep(150)
+      Sessions.reap(spark)
       t
     }
     once() // warm-up, untimed

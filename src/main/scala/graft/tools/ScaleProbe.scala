@@ -16,8 +16,9 @@ import graft.sources.Tables
  * caps work; a super-multiple ratio is the scale bug this tool exists to
  * catch.
  *
- * Protocol shared with SkewProbe/Bench via [[ProbeHarness]] (same session
- * knobs, untimed warm-up, median of SPARK_GRAFT_REPS=3); baseline and ×N
+ * Session from [[graft.Sessions]], shared with SkewProbe and Bench;
+ * timing protocol from [[ProbeHarness]] (untimed warm-up, median of
+ * SPARK_GRAFT_REPS=3, cleanup outside the timers); baseline and ×N
  * runs share one JVM so JIT state is comparable. Probe list overridable
  * via SPARK_GRAFT_PROBES. Results are hand-recorded in BENCH_NOTES.md.
  */
@@ -285,7 +286,7 @@ object ScaleProbe {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val probes = ProbeHarness.probesFrom("SPARK_GRAFT_PROBES", DefaultProbes)
-    val spark = ProbeHarness.buildSession(cpus)
+    val spark = graft.Sessions.local(cpus)
 
     // ×mult corpus: ids re-salted into disjoint ranges, text/names as-is
     val out = graft.util.Scratch.deleteOnExit(

@@ -19,8 +19,9 @@ import graft.sources.Tables
  * The skewed copy keeps the testdata's TIMESTAMP(NANOS) contract by
  * writing `ts` as epoch-nano BIGINT (what Tables.events' nanosAsLong
  * read path expects — a plain timestamp rewrite would break its
- * `ts div 1000` conversion). Protocol shared with ScaleProbe/Bench via
- * [[ProbeHarness]]; probe list overridable via SPARK_GRAFT_SKEW_PROBES
+ * `ts div 1000` conversion). Session from [[graft.Sessions]], shared with
+ * ScaleProbe and Bench; timing protocol from [[ProbeHarness]]; probe list
+ * overridable via SPARK_GRAFT_SKEW_PROBES
  * (its OWN env var — sharing ScaleProbe's would cross-wire the tools).
  */
 object SkewProbe {
@@ -95,7 +96,7 @@ object SkewProbe {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val probes = ProbeHarness.probesFrom("SPARK_GRAFT_SKEW_PROBES", DefaultProbes)
-    val spark = ProbeHarness.buildSession(cpus)
+    val spark = graft.Sessions.local(cpus)
 
     val out = graft.util.Scratch.deleteOnExit(
       s"/tmp/graft_skew_probe/${java.util.UUID.randomUUID.toString.take(8)}")

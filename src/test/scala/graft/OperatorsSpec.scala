@@ -994,6 +994,19 @@ class OperatorsSpec extends AnyFunSuite {
     assert(multi.nonEmpty)
   }
 
+  test("lshTopK radius-2 probe stages compile to whole-stage code") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.ByteCodeStats
+    val rnd = new scala.util.Random(31)
+    val emb = Seq.tabulate(40)(i => (i.toLong, Seq.fill(8)((rnd.nextFloat() - 0.5f) * 2)))
+      .toDF("vec_id", "embedding")
+    val df = Ann.lshTopK(emb.filter(col("vec_id") < 5), emb, bits = 8, k = 3, probeRadius = 2)
+    df.collect() // adaptive execution plans its final stages on the first run
+    val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
+    assert(stages.nonEmpty)
+    val failed = stages.collect { case (plan, _, ByteCodeStats.UNAVAILABLE) => plan }
+    assert(failed.isEmpty, s"stages that do not compile:\n${failed.mkString("\n")}")
+  }
+
   test("lshTopK multi-probe recovers boundary-straddling neighbors") {
     val rnd = new scala.util.Random(17)
     // each query's TRUE nearest neighbor is a twin whose first component
