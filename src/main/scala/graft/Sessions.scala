@@ -22,9 +22,10 @@ object Sessions {
       // local core for the ~600 KB documents file, but a parquet split
       // holds whole row groups and the file is ONE row group, so all its
       // rows still land in one split; Tables.documents redistributes such
-      // a scan to the planned split count. At real scale inputs arrive as
-      // thousands of splits and these two settings are left at their
-      // defaults.
+      // a scan to the planned split count, behind a fence that keeps a
+      // caller's filters (and their text kernels) above the exchange, on
+      // every split. At real scale inputs arrive as thousands of splits
+      // and these two settings are left at their defaults.
       .config("spark.sql.files.openCostInBytes", "16384")
       .config("spark.sql.files.minPartitionNum", cpus)
       // the whole-stage-codegen class cache is JVM-GLOBAL and defaults to

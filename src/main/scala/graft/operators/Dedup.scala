@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{text => T, vectors => V}
-import graft.util.{Fixpoint, Lineage}
+import graft.util.{Fixpoint, Lineage, Side}
 
 /**
  * Deduplication family for large-scale training-data pipelines. The exact
@@ -757,7 +757,10 @@ object Dedup {
    * component's minimum id as `component_id` (the canonical survivor),
    * including singletons (component_id = own id).
    *
-   * Each round updates
+   * Labels start ONE HOP in: comp(v) = min(v, min over neighbors u),
+   * from one groupBy over the edge cut, so a star or clique (the usual
+   * near-duplicate cluster) is already labelled before round 1, whatever
+   * id its centre holds. Each round then updates
    *   comp(v) <- min(comp(v), min over neighbors comp(u), comp(comp(v)))
    * — a neighbor-min hop plus a pointer jump (hash-to-min family), so
    * accumulated reach roughly doubles per round and convergence takes
@@ -774,7 +777,8 @@ object Dedup {
    *  - a driver-side convergence loop — bounded at O(log diameter)
    *    ROUNDS of fully distributed jobs (never per-row work): the
    *    fixpoint test is "sum of labels unchanged", valid because labels
-   *    only ever decrease.
+   *    only ever decrease. The sum is folded by each round's own cut job
+   *    ([[graft.util.Side.sum]]), so a round runs no measure job.
    *
    * Checkpoint durability is the caller's failure-domain choice:
    * `checkpointDir = None` (default) uses localCheckpoint — executor
@@ -813,10 +817,13 @@ object Dedup {
     val edges = Lineage.cut(pairs.select(col(id1).as("src"), col(id2).as("dst"))
       .unionAll(pairs.select(col(id2).as("src"), col(id1).as("dst"))), effDir)
     try {
-      def labelSum(df: DataFrame) =
-        df.agg(sum(col("comp").cast("decimal(38,0)"))).collect().head.getDecimal(0)
-      Lineage.iterate(nodes.select(col(idCol).as("id"), col(idCol).as("comp")),
-        maxRounds, effDir, Some(Fixpoint(labelSum,
+      // one-hop init: every node starts from the least id among itself and
+      // its neighbours, so a star or clique is labelled before round 1
+      val hop = edges.df.groupBy(col("src").as("id")).agg(min("dst").as("nbr_comp"))
+      val init = nodes.select(col(idCol).as("id"))
+        .join(hop, Seq("id"), "left")
+        .select(col("id"), least(col("id"), coalesce(col("nbr_comp"), col("id"))).as("comp"))
+      Lineage.iterate(init, maxRounds, effDir, Some(Fixpoint(Side.sum("comp"),
           s"connectedComponents did not converge within maxRounds=$maxRounds " +
             "(labels would be silently partial); raise maxRounds — rounds needed " +
             "grows with log2(component diameter)"))) { labels =>

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.{Cut, Fixpoint, Lineage}
+import graft.util.{Cut, Fixpoint, Lineage, Side}
 
 /**
  * Iterative graph analytics — the operator class a corpus-curation
@@ -390,7 +390,8 @@ object Graph {
    * which only shrinks; per-round state is cut by
    * [[graft.util.Lineage.iterate]] (the superseded round released
    * immediately), and convergence is its fixpoint on the edge count — a
-   * 1-row count, genuine coordinator state. Real graphs converge in few
+   * 1-row count, genuine coordinator state, counted by each round's own
+   * cut job. Real graphs converge in few
    * synchronous rounds (each round peels a whole degeneracy layer); at
    * 100 TB the edge diet after round 1 is the dominant saving, since
    * degree-<k leaves are the bulk of a web-scale graph.
@@ -399,7 +400,7 @@ object Graph {
     require(k >= 1 && maxRounds >= 1, "need k >= 1 and at least one round")
     val e = Lineage.iterate(
       canonicalEdges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b")),
-      maxRounds, fixpoint = Some(Fixpoint(_.count(),
+      maxRounds, fixpoint = Some(Fixpoint(Side.rows,
         s"k-core still peeling after $maxRounds rounds — raise maxRounds"))) { cur =>
       val deg = cur.select(col("a").as("id"))
         .unionAll(cur.select(col("b").as("id")))

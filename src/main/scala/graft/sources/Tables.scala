@@ -76,6 +76,21 @@ object Tables {
    * for at most that many files. Other tables keep the plain scan:
    * their cheap relational aggregates lose more to the extra exchange
    * than they gain from the spread.
+   *
+   * The redistribution carries a pushdown FENCE, `sample(1.0)`: Catalyst
+   * pushes a filter through a repartition, so without it a caller's
+   * filter (a language or quality gate whose text kernels are the
+   * costliest per-row work in a corpus build) would run below the
+   * exchange, inside the one scan task that holds the row group, and the
+   * spread would only move the survivors. A sample without replacement at
+   * fraction 1.0 keeps every row, costs one random draw per row, and is
+   * an operator Catalyst does not push filters through; its seed is fixed
+   * because whole-stage code inlines it, and a fresh seed per call would
+   * recompile the stage on every query. The trade-off, on
+   * this branch only: a cheap selective filter (say `doc_id % 20 = 0`)
+   * no longer reaches the scan either, so the exchange carries every
+   * document instead of the survivors. Files with enough row groups keep
+   * the plain scan and full pushdown.
    */
   def documents(spark: SparkSession, dir: String): DataFrame = {
     val raw = table(spark, dir, "documents")
@@ -84,6 +99,7 @@ object Tables {
     }.getOrElse(1)
     if (splits > 1 && fewerRowGroupsThan(spark, raw.inputFiles.toSeq, splits))
       raw.repartition(splits, raw.col("doc_id"))
+        .sample(withReplacement = false, fraction = 1.0, seed = 0L)
     else raw
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
-import graft.util.{Cut, Lineage}
+import graft.util.{Cut, Lineage, Side}
 
 /** Per-key upsert state carried across triggers by [[EventStream.runningUpsert]]:
   * seen-range plus the payload of the latest event (by ts, then event_id). */
@@ -778,15 +778,19 @@ object EventStream {
     // this each consumer re-derives the upstream projection (measured
     // ~30% of p8's cost at sf0.1). A lineage cut, not a cache: each
     // reference plans as a leaf scan, not as a cache stage of its own.
-    val slice = Lineage.cut(batch)
+    // The cut carries each row's seen-set bucket and returns the slice's
+    // distinct buckets from its own job.
+    val (slice, affected) = Lineage.measured(
+      batch.withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets)),
+      Side.distinct("bucket"))
     try {
-      crawlIntakeStaged(slice.df, batchId, statePath, corpusRoot, nBuckets,
-        markers, stops, minQuality)
+      crawlIntakeStaged(slice.df, affected, batchId, statePath, corpusRoot,
+        nBuckets, markers, stops, minQuality)
     } finally slice.release()
   }
 
-  private def crawlIntakeStaged(batch: DataFrame, batchId: Long,
-      statePath: String, corpusRoot: String, nBuckets: Int,
+  private def crawlIntakeStaged(batch: DataFrame, affected: Set[Long],
+      batchId: Long, statePath: String, corpusRoot: String, nBuckets: Int,
       markers: Seq[(String, Seq[String])], stops: Seq[String],
       minQuality: Double): Unit = {
     import graft.functions.{text => T}
@@ -796,10 +800,11 @@ object EventStream {
 
     // 1. frontier fold + new-winner selection — BUCKET-DELTA state
     // ([[FrontierState]]): the slice's distinct curls name the affected
-    // buckets, the anti-join reads ONLY those buckets of the prior
-    // version (a curl can only match inside its own bucket), and the
-    // fold rewrites only them; per-trigger read AND write cost track
-    // the slice's bucket spread, never the frontier size.
+    // buckets (`affected`, from the slice's cut), the anti-join reads
+    // ONLY those buckets of the prior version (a curl can only match
+    // inside its own bucket), and the fold rewrites only them;
+    // per-trigger read AND write cost track the slice's bucket spread,
+    // never the frontier size.
     val ranked = batch.withColumn("__rn",
       row_number().over(Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
     val winners = ranked.filter(col("__rn") === 1).drop("__rn")
@@ -814,7 +819,6 @@ object EventStream {
       winners.select(col("curl"), col("doc_id").as("first_doc_id")), Seq("curl"))
       .select(col("curl"), col("domain"), col("first_doc_id"), col("n_total"))
       .withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets))
-    val affected = FrontierState.affectedBuckets(slicePart)
     val base =
       if (batchId == 0) None
       else Some(FrontierState.readBuckets(spark, frontierRoot,
@@ -825,7 +829,7 @@ object EventStream {
         winners.join(seen.select(col("curl")), Seq("curl"), "left_anti")
     }
     // slicePart's buckets == the anti-join's buckets (every distinct
-    // slice curl contributes a row), so ONE bucket collect and ONE
+    // slice curl contributes a row), so ONE bucket set and ONE
     // bucket-pruned read serve both the anti-join and the fold
     FrontierState.foldPublish(frontierRoot, batchId, slicePart,
       crawlFrontierSchema, base, Some(affected)) { (b, d) =>
@@ -937,8 +941,12 @@ object EventStream {
    * buckets the slice's curls hash into, and a trigger rewrites ONLY
    * the buckets that gained a genuinely NEW curl (a set union is
    * idempotent, so re-seen curls change nothing and carry by
-   * reference); ledgers are domain-sized; per-trigger dedup cost is
-   * slice-sized and no trigger re-reads the whole frontier. One read is
+   * reference). Both bucket sets — the slice's, which the anti-join
+   * reads, and the unseen frontier's, which the fold rewrites — come out
+   * of the jobs that stage those two cuts ([[graft.util.Side.distinct]]),
+   * so a trigger runs no bucket collect of its own. Ledgers are
+   * domain-sized; per-trigger dedup cost is slice-sized and no trigger
+   * re-reads the whole frontier. One read is
    * still store-sized: the frontier's not-in-store anti-join scans the
    * store's whole `curl` column every trigger (one column, never the
    * text).
@@ -960,37 +968,43 @@ object EventStream {
     def stage(df: DataFrame): DataFrame = {
       val c = Lineage.cut(df); cuts += c; c.df
     }
+    // a staged frame with a `bucket` column, plus the distinct buckets
+    // its rows hash into, folded by the cut's own job (no collect job)
+    def stageBuckets(df: DataFrame): (DataFrame, Set[Long]) = {
+      val (c, buckets) = Lineage.measured(df, Side.distinct("bucket"))
+      cuts += c
+      (c.df, buckets)
+    }
     try {
-      val slice = stage(batch)
+      val (slice, sliceBuckets) = stageBuckets(
+        batch.withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets)))
       val store = spark.read.schema(admissionStoreSchema).parquet(storePath)
       val seenRoot = s"$statePath/seen"
       // A. frontier: slice winner -> unseen vs prior triggers -> not in
-      // store. Every slice curl has a winner, so the slice's own curls
+      // store. Every slice curl has a winner, so the slice's own buckets
       // name the seen-set buckets the anti-join reads.
       val prev =
         if (batchId == 0) None
         else Some(FrontierState.readBuckets(spark, seenRoot,
-          FrontierState.version(batchId - 1), admissionSeenSchema,
-          FrontierState.affectedBuckets(slice.select(
-            FrontierState.bucketOf(col("curl"), nBuckets).as("bucket")))))
+          FrontierState.version(batchId - 1), admissionSeenSchema, sliceBuckets))
       val winners = slice.withColumn("__rn", row_number().over(
           Window.partitionBy(col("curl")).orderBy(col("doc_id"))))
         .filter(col("__rn") === 1).drop("__rn")
-        .withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets))
       // the window and the seen anti-join run once, into the frontier
       // both the seen-set fold and `fresh` read
-      val unseen = stage(prev match {
+      val (unseen, unseenBuckets) = stageBuckets(prev match {
         case None => winners
         case Some(seen) =>
           winners.join(seen.select(col("curl")), Seq("curl"), "left_anti")
       })
       // the seen-set union only grows by the genuinely NEW curls, so the
       // contribution (and the bucket rewrite) is restricted to exactly
-      // the buckets that gained one; base is re-read inside foldPublish
-      // pruned to THOSE buckets (a subset of the anti-join's read)
+      // the buckets that gained one, named by the unseen cut; base is
+      // re-read inside foldPublish pruned to THOSE buckets (a subset of
+      // the anti-join's read)
       FrontierState.foldPublish(seenRoot, batchId,
-        unseen.select(col("curl"), col("bucket")),
-        admissionSeenSchema)((base, delta) => base.unionByName(delta))
+        unseen.select(col("curl"), col("bucket")), admissionSeenSchema,
+        affected = Some(unseenBuckets))((base, delta) => base.unionByName(delta))
       // this anti-join scans the store's whole curl column every trigger
       val fresh = stage(unseen.drop("bucket")
         .join(store.select("curl"), Seq("curl"), "left_anti"))

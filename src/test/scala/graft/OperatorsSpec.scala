@@ -615,17 +615,22 @@ class OperatorsSpec extends AnyFunSuite {
     }
     val rnd = new scala.util.Random(23)
     // a long path (stresses multi-round propagation: diameter 39), two
-    // cliques, random extra edges, and isolated nodes 70..79
+    // cliques, random extra edges, isolated nodes 70..79, and stars whose
+    // centre is not the minimum id (86 over 80..89, 97 over 90..99, the
+    // second with its edges listed leaf-first)
     val pathIds = rnd.shuffle((0L until 40L).toVector)
     val edges = pathIds.sliding(2).map(p => (p(0), p(1))).toSeq ++
       (40L until 50L).flatMap(a => (a + 1 until 50L).map(b => (a, b))) ++
       Seq((50L, 51L), (51L, 52L), (60L, 61L)) ++
-      Seq.fill(10)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong)).filter(p => p._1 != p._2)
-    val nodes = (0L until 80L).map(Tuple1(_)).toDF("id")
+      Seq.fill(10)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong)).filter(p => p._1 != p._2) ++
+      (80L until 90L).filter(_ != 86L).map(l => (86L, l)) ++
+      (90L until 100L).filter(_ != 97L).map(l => (l, 97L))
+    val nodes = (0L until 100L).map(Tuple1(_)).toDF("id")
     val pairs = edges.toDF("id1", "id2")
     val got = Dedup.connectedComponents(nodes, "id", pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expect = refComponents(80, edges)
+    val expect = refComponents(100, edges)
+    (80L until 100L).foreach(i => assert(got(i) == i / 10 * 10, s"star node $i"))
     assert(got == expect)
     (70L until 80L).foreach(i => assert(got(i) == i, s"isolated node $i"))
   }

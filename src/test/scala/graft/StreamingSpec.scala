@@ -1374,6 +1374,69 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming corpus admission takes its bucket sets from its cuts: no collect job, same ledgers") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val good = "the quick brown fox jumps over the lazy dog and the cat"
+    val stored = good + " original corpus document kept"
+    val dir = java.nio.file.Files.createTempDirectory("s26buckets").toString
+    Seq((100L, "a.com", "https://a.com/s1", stored))
+      .toDF("doc_id", "domain", "curl", "t").write.parquet(s"$dir/store")
+    graft.operators.Dedup.minhashSignature(
+      spark.read.parquet(s"$dir/store").select(col("doc_id").as("id"), col("t")),
+      "id", "t", shingleN = 3, k = 16)
+      .write.parquet(s"$dir/store_sig")
+    // trigger 1 re-fetches a curl trigger 0 saw (its bucket is read but
+    // not rewritten) and brings one new curl
+    val triggers = Seq(
+      Seq((1L, "a.com", "https://a.com/1", good), (2L, "a.com", "https://a.com/s1", good),
+        (3L, "b.com", "https://b.com/3", stored)),
+      Seq((4L, "a.com", "https://a.com/1", good), (5L, "c.com", "https://c.com/5", good)))
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(qe.analyzed match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toString.endsWith("/marker") => "marker"
+          case _ => funcName
+        })
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      triggers.zipWithIndex.foreach { case (t, i) =>
+        EventStream.corpusAdmissionBatch(s"$dir/state", s"$dir/store", s"$dir/store_sig",
+          3, 16, 4, 0.8, 1000, Seq("the", "and", "on"), 0.27)(
+          t.toDF("doc_id", "domain", "curl", "t"), i.toLong)
+      }
+      // listener events arrive in order: once this marker is seen, every
+      // trigger action before it has been recorded
+      spark.range(1).toDF("marker").write.mode("overwrite").parquet(s"$dir/marker")
+      eventually(timeout(30.seconds)) { assert(actions.contains("marker")) }
+    } finally spark.listenerManager.unregister(listener)
+    assert(!actions.contains("collect"),
+      s"a trigger must take its bucket sets from its cuts, not collect them: $actions")
+    def ledger(i: Int) = spark.read.schema(EventStream.admissionLedgerSchema)
+      .parquet(s"$dir/state/ledger/trig=$i")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    assert(ledger(0) == Set(("a.com", 2L, 1L, 1L, 1L, 12L), ("b.com", 1L, 1L, 0L, 0L, 0L)))
+    assert(ledger(1) == Set(("a.com", 1L, 0L, 0L, 0L, 0L), ("c.com", 1L, 1L, 1L, 1L, 12L)))
+    // the seen set holds exactly the distinct curls, each in its own bucket
+    val seen = EventStream.admissionSeenSchema
+    val v1 = graft.streaming.FrontierState.read(spark, s"$dir/state/seen", 1, seen)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val buckets = spark.createDataFrame(v1.keys.toSeq.map(Tuple1(_))).toDF("curl")
+      .select(col("curl"), graft.streaming.FrontierState.bucketOf(col("curl"), 16))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(v1 == buckets && v1.keySet == Set("https://a.com/1", "https://a.com/s1",
+      "https://b.com/3", "https://c.com/5"))
+  }
+
   test("streaming growth accounting: day-sliced fold == batch ledger; frontier crosses triggers") {
     import graft.operators.Temporal
     implicit val ctx = spark.sqlContext
