@@ -176,6 +176,74 @@ object text {
     when(size(ws) === 0, lit(0.0))
       .otherwise(size(array_distinct(ws)).cast("double") / size(ws).cast("double"))
 
+  // ------------------------------------------------------ curation gate
+  // The LLM-data gate every corpus entry shares: language ID by marker
+  // hits (t1), then t2's weighted quality score. `markers` is the
+  // ordered (lang, marker words) list; the hit columns are named
+  // `s_<lang>`, and the predicates below read them by those names.
+
+  /** Per-language marker-hit counts over the token array `ws`, one
+    * column `s_<lang>` per entry of `markers` (repeats count). */
+  def markerHits(ws: Column, markers: Seq[(String, Seq[String])]): Seq[Column] =
+    markers.map { case (l, ms) =>
+      size(filter(ws, w => w.isin(ms.map(lit): _*))).as(s"s_$l")
+    }
+
+  /** The largest `s_<lang>` hit count. */
+  def markerMax(markers: Seq[(String, Seq[String])]): Column =
+    greatest(markers.map { case (l, _) => col(s"s_$l") }: _*)
+
+  /** The language gate: English is a maximum of the hit counts with at
+    * least one hit. Ties are admitted; `en` is listed first, so t1's
+    * pick ([[langPred]]) agrees on every admitted doc. */
+  def isEnglish(markers: Seq[(String, Seq[String])]): Column =
+    col("s_en") > 0 && col("s_en") === markerMax(markers)
+
+  /** t1's language pick over the `s_<lang>` columns and their maximum
+    * in column `mx`: the first listed language whose count equals `mx`,
+    * or "unknown" when no marker hits. */
+  def langPred(markers: Seq[(String, Seq[String])]): Column = {
+    val pick = markers.foldRight(lit("unknown")) {
+      case ((l, _), e) => when(col(s"s_$l") === col("mx"), lit(l)).otherwise(e)
+    }
+    when(col("mx") === 0, "unknown").otherwise(pick)
+  }
+
+  /** t2's weights over its four components. */
+  private def qualityOf(lenScore: Column, distinct: Column, punct: Column,
+      stopword: Column): Column =
+    lenScore * 0.35 + distinct * 0.25 + (lit(1.0) - punct) * 0.25 + stopword * 0.15
+
+  private def lenScore(t: Column): Column =
+    least(length(t).cast("double") / 500.0, lit(1.0))
+
+  private def punctRatio(t: Column): Column =
+    (length(t) - length(regexp_replace(t, "[a-z0-9 ]", ""))).cast("double") /
+      length(t).cast("double")
+
+  /** t2's quality components of normalized text `t` with tokens `ws`,
+    * named `len_score`, `distinct_ratio`, `stopword_ratio` and
+    * `punct_ratio`: length/500 capped at 1, distinct-token ratio,
+    * stopword-hit ratio, and — despite its name — the share of chars
+    * that `[a-z0-9 ]` matches (length minus the length left after
+    * deleting them), so the score's `1 − punct` term grows with
+    * punctuation. Every oracle replays it as written. */
+  def qualityComponents(t: Column, ws: Column, stops: Seq[String]): Seq[Column] = Seq(
+    lenScore(t).as("len_score"),
+    distinctRatio(ws).as("distinct_ratio"),
+    stopwordRatio(ws, stops).as("stopword_ratio"),
+    punctRatio(t).as("punct_ratio"))
+
+  /** t2's quality score over the columns [[qualityComponents]] names. */
+  def qualityFromComponents: Column =
+    qualityOf(col("len_score"), col("distinct_ratio"), col("punct_ratio"),
+      col("stopword_ratio"))
+
+  /** t2's quality score computed inline from `t` and `ws`:
+    * 0.35·len + 0.25·distinct + 0.25·(1 − punct) + 0.15·stopword. */
+  def quality(t: Column, ws: Column, stops: Seq[String]): Column =
+    qualityOf(lenScore(t), distinctRatio(ws), punctRatio(t), stopwordRatio(ws, stops))
+
   /** PII patterns shared by [[redactPii]] and the oracle SQL (no-drift).
     * Kept to the regex subset with identical semantics in Java regex and
     * RE2-style engines (no backrefs/lookaround). */

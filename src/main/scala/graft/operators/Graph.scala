@@ -565,15 +565,6 @@ object Graph {
     require(length >= 1, "need at least one step")
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
-    // dev-only step profiler (SPARK_GRAFT_WALKLOG=1): stderr wall-clock
-    // per phase, for attributing the in-suite g10 elevation
-    val wlog = sys.env.get("SPARK_GRAFT_WALKLOG").contains("1")
-    var tPrev = System.nanoTime()
-    def mark(phase: String): Unit = if (wlog) {
-      val t = System.nanoTime()
-      System.err.println(f"[walklog] $phase%-18s ${(t - tPrev) / 1e9}%7.2f s")
-      tPrev = t
-    }
     // the caller's edge construction is consumed twice below (the ranked
     // window and the degree aggregate) — cache it once, and size the
     // step width to the data (dataWidth — the r17 scaling fix)
@@ -628,7 +619,6 @@ object Graph {
         .select(col("walk_id"), col("walk_id").as("cur"),
           col("outdeg").as("cur_outdeg"))
         .transform(Lineage.cut(_).df)
-      mark("seed")
       val out = Seq.newBuilder[DataFrame]
       out += frontier.select(col("walk_id"), lit(0L).as("step"),
         col("cur").as("node_id"))
@@ -644,15 +634,6 @@ object Graph {
           .select(col("walk_id"), col("dst").as("cur"),
             col("dst_outdeg").as("cur_outdeg"))
         frontier = Lineage.cut(joined).df
-        mark(s"step $k")
-        if (wlog) {
-          val plan = joined.queryExecution.executedPlan.toString
-          val joinNodes = plan.linesIterator
-            .filter(l => l.contains("Join") || l.contains("Exchange"))
-            .map(_.trim.take(160)).mkString(" || ")
-          System.err.println(s"[walklog]   rows=${frontier.count()} join: $joinNodes")
-          tPrev = System.nanoTime()
-        }
         out += frontier.select(col("walk_id"), lit(k.toLong).as("step"),
           col("cur").as("node_id"))
       }

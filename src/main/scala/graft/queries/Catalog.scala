@@ -53,6 +53,16 @@ object Catalog {
         .digest(canonical.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
   }
 
+  /** `name`'s scratch path for dataset `d`, deleted first so every pass
+    * starts from an empty directory (a stale chain or store from a prior
+    * pass would read as committed work). */
+  private def freshScratch(s: SparkSession, d: String, name: String): String = {
+    val path = s"$scratchRoot/${dsScratch(d)}/$name"
+    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+    path
+  }
+
   // ---------------------------------------------------------------- a1
   private val a1 = Q(
     "a1_agg_pushdown",
@@ -1515,9 +1525,7 @@ object Catalog {
     (s, d) => {
       val uniqueCols = Seq("event_id", "user_id")
       val ev = q1Planted(s, d)
-      val statePath = s"$scratchRoot/${dsScratch(d)}/quality_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "quality_state")
       val body = graft.streaming.EventStream.qualityFoldBatch(
         uniqueCols, Seq("event_type", "value"),
         Seq("event_type" -> EnumDomains.validEventTypes),
@@ -3216,83 +3224,97 @@ object Catalog {
       "t1_lang_id",
       (s, d) => {
         val ws = T.words(col("text"))
-        val scoreCols = langs.map { case (lang, ms) =>
-          size(filter(ws, w => w.isin(ms.map(lit): _*))).as(s"s_$lang")
-        }
         val scored = Tables.documents(s, d)
-          .select((col("doc_id") +: size(ws).as("n_toks") +: scoreCols): _*)
-        val mx = greatest(langs.map { case (l, _) => col(s"s_$l") }: _*)
-        val pick = langs.foldRight(lit("unknown"): org.apache.spark.sql.Column) {
-          case ((l, _), elseCol) => when(col(s"s_$l") === col("mx"), lit(l)).otherwise(elseCol)
-        }
-        scored.withColumn("mx", mx)
-          .withColumn("lang_pred", when(col("mx") === 0, "unknown").otherwise(pick))
+          .select((col("doc_id") +: size(ws).as("n_toks") +: T.markerHits(ws, langs)): _*)
+        scored.withColumn("mx", T.markerMax(langs))
+          .withColumn("lang_pred", T.langPred(langs))
           .withColumn("lang_score",
             when(col("n_toks") === 0, lit(0.0))
               .otherwise(col("mx").cast("double") / col("n_toks").cast("double")))
           .select("doc_id", "lang_pred", "lang_score")
       },
-      Some {
-        val scoreDefs = langs.map { case (lang, ms) =>
-          val lst = ms.map(m => s"'$m'").mkString(", ")
-          s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
-        }.mkString(",\n            ")
-        val mxExpr = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val pick = langs.map { case (l, _) => s"WHEN s_$l = mx THEN '$l'" }.mkString(" ")
-        s"""
+      Some(s"""
         WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws FROM documents),
         sc AS (SELECT doc_id, len(ws) AS n_toks,
-            $scoreDefs
+            ${QualityFixture.hitsSql}
           FROM w),
-        m AS (SELECT *, $mxExpr AS mx FROM sc)
+        m AS (SELECT *, ${QualityFixture.maxSql} AS mx FROM sc)
         SELECT doc_id,
-          CASE WHEN mx = 0 THEN 'unknown' $pick ELSE 'unknown' END AS lang_pred,
+          ${QualityFixture.langPredSql} AS lang_pred,
           CASE WHEN n_toks = 0 THEN 0.0
                ELSE CAST(mx AS DOUBLE) / CAST(n_toks AS DOUBLE) END AS lang_score
-        FROM m"""
-      })
+        FROM m"""))
   }
 
   // ---------------------------------------------------------------- t2
-  /** t2's quality chain as a shared fixture: c11's importance weights
-    * reuse the SAME scored table (one Spark chain, one SQL string — the
-    * bm25OracleSql sharing rule, so the two entries cannot drift). */
+  /** The curation gate's SQL side, and t2's quality chain as a shared
+    * fixture. The fragments below are the oracle twins of the gate's
+    * `graft.functions.text` builders (markerHits, markerMax, isEnglish,
+    * langPred, qualityComponents, quality): every gated entry's oracle
+    * takes them from here, so a weight or marker rule has one SQL copy.
+    * c11's importance weights reuse t2's SAME scored table (one Spark
+    * chain, one SQL string — the bm25OracleSql sharing rule, so the two
+    * entries cannot drift). */
   private object QualityFixture {
     val stops = Dictionaries.stopwordsEn
     val stopsSql = stops.map(s0 => s"'$s0'").mkString(", ")
+    private val langs = Dictionaries.langMarkers
+
+    /** `s_<lang>` marker-hit counts over the list column `ws`. */
+    val hitsSql: String = langs.map { case (lang, ms) =>
+      val lst = ms.map(m => s"'$m'").mkString(", ")
+      s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
+    }.mkString(",\n            ")
+    val maxSql: String = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
+    /** English is a maximum with at least one hit (ties admitted). */
+    val isEnSql: String = s"s_en > 0 AND s_en = $maxSql"
+    /** t1's pick over the hit columns and their maximum `mx`. */
+    val langPredSql: String = langs.map { case (l, _) => s"WHEN s_$l = mx THEN '$l'" }
+      .mkString("CASE WHEN mx = 0 THEN 'unknown' ", " ", " ELSE 'unknown' END")
+
+    private def lenSql(t: String) = s"least(CAST(len($t) AS DOUBLE) / 500.0, 1.0)"
+    private def distinctSql(ws: String) =
+      s"""(CASE WHEN len($ws) = 0 THEN 0.0
+                 ELSE CAST(len(list_distinct($ws)) AS DOUBLE) / CAST(len($ws) AS DOUBLE) END)"""
+    private def stopwordSql(ws: String) =
+      s"""(CASE WHEN len($ws) = 0 THEN 0.0
+                 ELSE CAST(len(list_filter($ws, w -> list_contains([$stopsSql], w))) AS DOUBLE) /
+                      CAST(len($ws) AS DOUBLE) END)"""
+    private def punctSql(t: String) =
+      s"""CAST(len($t) - len(regexp_replace($t, '[a-z0-9 ]', '', 'g')) AS DOUBLE) /
+              CAST(len($t) AS DOUBLE)"""
+    private def qualityOfSql(len: String, distinct: String, punct: String, stop: String) =
+      s"""$len * 0.35 + $distinct * 0.25 + (1.0 - $punct) * 0.25 +
+            $stop * 0.15"""
+
+    /** t2's four named components of text `t` with tokens `ws`. */
+    def componentsSql(t: String, ws: String): String =
+      s"""${lenSql(t)} AS len_score,
+            ${distinctSql(ws)} AS distinct_ratio,
+            ${stopwordSql(ws)} AS stopword_ratio,
+            ${punctSql(t)} AS punct_ratio"""
+    /** t2's score over the columns [[componentsSql]] names. */
+    val qualityFromComponentsSql: String =
+      qualityOfSql("len_score", "distinct_ratio", "punct_ratio", "stopword_ratio")
+    /** t2's score computed inline from text `t` and tokens `ws`. */
+    def qualitySql(t: String, ws: String): String =
+      qualityOfSql(lenSql(t), distinctSql(ws), punctSql(t), stopwordSql(ws))
+
     def scored(s: SparkSession, d: String): DataFrame = {
       val t = T.normKey(col("text"))
-      val ws = split(t, " ")
-      val lenScore = least(length(t).cast("double") / 500.0, lit(1.0))
-      val punctRatio = (length(t) - length(regexp_replace(t, "[a-z0-9 ]", "")))
-        .cast("double") / length(t).cast("double")
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        lenScore.as("len_score"),
-        T.distinctRatio(ws).as("distinct_ratio"),
-        T.stopwordRatio(ws, stops).as("stopword_ratio"),
-        punctRatio.as("punct_ratio"))
-        .withColumn("quality",
-          col("len_score") * 0.35 + col("distinct_ratio") * 0.25 +
-            (lit(1.0) - col("punct_ratio")) * 0.25 + col("stopword_ratio") * 0.15)
+      Tables.documents(s, d)
+        .select((col("doc_id") +: T.qualityComponents(t, split(t, " "), stops)): _*)
+        .withColumn("quality", T.qualityFromComponents)
     }
     val scoredSql: String = s"""
         WITH b AS (SELECT doc_id, ${normSql("text")} AS t FROM documents),
         w AS (SELECT doc_id, t, string_split(t, ' ') AS ws FROM b),
         sc AS (
           SELECT doc_id,
-            least(CAST(len(t) AS DOUBLE) / 500.0, 1.0) AS len_score,
-            CASE WHEN len(ws) = 0 THEN 0.0
-                 ELSE CAST(len(list_distinct(ws)) AS DOUBLE) / CAST(len(ws) AS DOUBLE) END AS distinct_ratio,
-            CASE WHEN len(ws) = 0 THEN 0.0
-                 ELSE CAST(len(list_filter(ws, w -> list_contains([$stopsSql], w))) AS DOUBLE) /
-                      CAST(len(ws) AS DOUBLE) END AS stopword_ratio,
-            CAST(len(t) - len(regexp_replace(t, '[a-z0-9 ]', '', 'g')) AS DOUBLE) /
-              CAST(len(t) AS DOUBLE) AS punct_ratio
+            ${componentsSql("t", "ws")}
           FROM w)
         SELECT doc_id, len_score, distinct_ratio, stopword_ratio, punct_ratio,
-          len_score * 0.35 + distinct_ratio * 0.25 + (1.0 - punct_ratio) * 0.25 +
-            stopword_ratio * 0.15 AS quality
+          $qualityFromComponentsSql AS quality
         FROM sc"""
   }
 
@@ -4243,16 +4265,16 @@ object Catalog {
   // ---------------------------------------------------------------- c3
   // End-to-end curation pipeline — the composition a training-data run
   // actually executes, as ONE declarative plan: language filter (doc is
-  // 'en' iff the en marker-hit count is positive and maximal — t1's pick
-  // rule) → quality filter (t2's exact weighted formula, threshold 0.3 ≈
-  // the corpus' 35th percentile) → exact-dedup survivors (min doc_id per
+  // 'en' iff the en marker-hit count is positive and a maximum, ties
+  // admitted — `en` is listed first, so t1's pick agrees) → quality
+  // filter (t2's exact weighted formula, threshold 0.3 ≈ the corpus'
+  // 35th percentile) → exact-dedup survivors (min doc_id per
   // normalized-text md5, Dedup.exact shape) → deterministic hash split
   // (c1's salted md5 fraction). Everything narrow except one groupBy +
   // one semi-join for dedup; filters run BEFORE the shuffle so only
   // surviving docs move. All constants shared with the oracle.
   private val c3 = {
     val langs = Dictionaries.langMarkers
-    val stops = Dictionaries.stopwordsEn
     val qualityMin = 0.3
     val salt = "curate0"
     Q(
@@ -4260,24 +4282,12 @@ object Catalog {
       (s, d) => {
         val t = T.normKey(col("text"))
         val ws0 = split(t, " ")
-        val hitCols = langs.map { case (l, ms) =>
-          size(filter(ws0, w => w.isin(ms.map(lit): _*))).as(s"s_$l")
-        }
-        val lenScore = least(length(t).cast("double") / 500.0, lit(1.0))
-        val punctRatio = (length(t) - length(regexp_replace(t, "[a-z0-9 ]", "")))
-          .cast("double") / length(t).cast("double")
         val scored = Tables.documents(s, d).select(
-          (Seq(col("doc_id"), t.as("t"),
-            lenScore.as("len_score"),
-            T.distinctRatio(ws0).as("distinct_ratio"),
-            T.stopwordRatio(ws0, stops).as("stopword_ratio"),
-            punctRatio.as("punct_ratio")) ++ hitCols): _*)
-        val isEn = col("s_en") > 0 &&
-          col("s_en") === greatest(langs.map { case (l, _) => col(s"s_$l") }: _*)
-        val quality = col("len_score") * 0.35 + col("distinct_ratio") * 0.25 +
-          (lit(1.0) - col("punct_ratio")) * 0.25 + col("stopword_ratio") * 0.15
-        val filtered = scored.filter(isEn)
-          .withColumn("quality", quality)
+          (Seq(col("doc_id"), t.as("t")) ++
+            T.qualityComponents(t, ws0, QualityFixture.stops) ++
+            T.markerHits(ws0, langs)): _*)
+        val filtered = scored.filter(T.isEnglish(langs))
+          .withColumn("quality", T.qualityFromComponents)
           .filter(col("quality") >= qualityMin)
           .select("doc_id", "t", "quality")
         val survivors = filtered
@@ -4289,33 +4299,19 @@ object Catalog {
           "doc_id", salt, Seq(0.8 -> "train", 0.9 -> "val"), "test")
       },
       Some {
-        val scoreDefs = langs.map { case (lang, ms) =>
-          val lst = ms.map(m => s"'$m'").mkString(", ")
-          s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
-        }.mkString(",\n            ")
-        val mxExpr = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val stopsSql = stops.map(s0 => s"'$s0'").mkString(", ")
         val frac = hashFracSql(s"CAST(doc_id AS VARCHAR) || '|$salt'")
         s"""
         WITH b AS (SELECT doc_id, ${normSql("text")} AS t FROM documents),
         w AS (SELECT doc_id, t, string_split(t, ' ') AS ws FROM b),
         sc AS (
           SELECT doc_id, t,
-            least(CAST(len(t) AS DOUBLE) / 500.0, 1.0) AS len_score,
-            CASE WHEN len(ws) = 0 THEN 0.0
-                 ELSE CAST(len(list_distinct(ws)) AS DOUBLE) / CAST(len(ws) AS DOUBLE) END AS distinct_ratio,
-            CASE WHEN len(ws) = 0 THEN 0.0
-                 ELSE CAST(len(list_filter(ws, w -> list_contains([$stopsSql], w))) AS DOUBLE) /
-                      CAST(len(ws) AS DOUBLE) END AS stopword_ratio,
-            CAST(len(t) - len(regexp_replace(t, '[a-z0-9 ]', '', 'g')) AS DOUBLE) /
-              CAST(len(t) AS DOUBLE) AS punct_ratio,
-            $scoreDefs
+            ${QualityFixture.componentsSql("t", "ws")},
+            ${QualityFixture.hitsSql}
           FROM w),
         q AS (
           SELECT doc_id, t,
-            len_score * 0.35 + distinct_ratio * 0.25 + (1.0 - punct_ratio) * 0.25 +
-              stopword_ratio * 0.15 AS quality
-          FROM sc WHERE s_en > 0 AND s_en = $mxExpr),
+            ${QualityFixture.qualityFromComponentsSql} AS quality
+          FROM sc WHERE ${QualityFixture.isEnSql}),
         f AS (SELECT doc_id, t, quality FROM q WHERE quality >= $qualityMin),
         surv AS (SELECT min(doc_id) AS sdoc_id FROM f GROUP BY md5(t))
         SELECT f.doc_id, f.quality,
@@ -5201,9 +5197,7 @@ object Catalog {
     "w23_concurrent_commit",
     (s, d) => {
       import graft.sources.ManifestStore
-      val root = s"$scratchRoot/${dsScratch(d)}/mstore_w23"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = freshScratch(s, d, "mstore_w23")
       val ev = Tables.events(s, d)
       def state(df: DataFrame) = Upsert
         .latestState(df, "user_id", "ts", "event_id", MStore.payload)
@@ -5445,13 +5439,10 @@ object Catalog {
     "s9_stream_manifest",
     (s, d) => {
       import graft.sources.ManifestStore
-      val root = s"$scratchRoot/${dsScratch(d)}/mstore_s9"
       // fresh chain per pass: the body treats an existing version name as
       // an already-committed trigger (retry skip), so a stale chain from
       // a prior bench pass would short-circuit every fold step
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = freshScratch(s, d, "mstore_s9")
       val ev = Tables.events(s, d)
       val slices = Seq(
         ev.filter(col("ts") < lit(S5Cuts(0))),
@@ -5582,12 +5573,9 @@ object Catalog {
     "s11_stream_wap",
     (s, d) => {
       import graft.sources.ManifestStore
-      val root = s"$scratchRoot/${dsScratch(d)}/mstore_s11"
       // fresh chain per pass: the body's retry skip would otherwise
       // short-circuit on a prior bench pass's committed versions
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = freshScratch(s, d, "mstore_s11")
       // w17's chain shape: day slices restricted to disjoint shard
       // ranges, so each delta REWRITES a subset and carries the rest by
       // reference — the file sharing the audit-diff economics ride on
@@ -5677,10 +5665,7 @@ object Catalog {
   private val w15 = Q(
     "w15_ann_delete",
     (s, d) => {
-      val root = s"$scratchRoot/${dsScratch(d)}/ann_delete"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = freshScratch(s, d, "ann_delete")
       val e = Tables.embeddings(s, d)
       val cent = graft.operators.Ann.sampleCentroids(e, Ivf.nCent)
       val assigned = graft.operators.Ann.assignCells(e, cent)
@@ -5727,9 +5712,7 @@ object Catalog {
     (s, d) => {
       val e = Tables.embeddings(s, d)
       val cent = graft.operators.Ann.sampleCentroids(e, Ivf.nCent)
-      val path = s"$scratchRoot/${dsScratch(d)}/ivf_cells_streamed"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val path = freshScratch(s, d, "ivf_cells_streamed")
       graft.sources.Sink.writePartitioned(
         graft.operators.Ann.assignCells(e.filter(col("vec_id") % 2 === 0), cent),
         path, Seq("cell"))
@@ -5764,9 +5747,7 @@ object Catalog {
     "s7_stream_drift",
     (s, d) => {
       val ev = Tables.events(s, d)
-      val statePath = s"$scratchRoot/${dsScratch(d)}/drift_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "drift_state")
       val body = graft.streaming.EventStream.histogramFoldBatch(
         "event_type", "value", Q3.binW.toDouble, Q3.stateSchema, statePath) _
       val b = ev.filter(col("ts") >= lit(Q3.split).cast("timestamp"))
@@ -5805,9 +5786,7 @@ object Catalog {
     "s18_stream_embedding_drift",
     (s, d) => {
       val planted = Q7.planted(s, d)
-      val statePath = s"$scratchRoot/${dsScratch(d)}/embdrift_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "embdrift_state")
       val body = graft.streaming.VectorStream.embeddingCellsFoldBatch(statePath) _
       val cur = planted.filter(col("_cur"))
       (0 until 3).foreach { i => // %3==0 splits as vec_id%9 ∈ {0,3,6}
@@ -5900,7 +5879,6 @@ object Catalog {
   // six stages bit-for-bit in one SQL chain.
   private val p4 = {
     val langs = Dictionaries.langMarkers
-    val stops = Dictionaries.stopwordsEn
     val qualityMin = 0.3
     val gramN = 5
     val budgets = Seq("src0" -> 20000L, "src1" -> 12000L)
@@ -5916,24 +5894,12 @@ object Catalog {
         val pool = docs.filter(col("doc_id") % 20 =!= 0)
         val t = T.normKey(col("text"))
         val ws0 = split(t, " ")
-        val hitCols = langs.map { case (l, ms) =>
-          size(filter(ws0, w => w.isin(ms.map(lit): _*))).as(s"s_$l")
-        }
-        val lenScore = least(length(t).cast("double") / 500.0, lit(1.0))
-        val punctRatio = (length(t) - length(regexp_replace(t, "[a-z0-9 ]", "")))
-          .cast("double") / length(t).cast("double")
         val scored = pool.select(
-          (Seq(col("doc_id"), col("source"), t.as("t"),
-            lenScore.as("len_score"),
-            T.distinctRatio(ws0).as("distinct_ratio"),
-            T.stopwordRatio(ws0, stops).as("stopword_ratio"),
-            punctRatio.as("punct_ratio")) ++ hitCols): _*)
-        val isEn = col("s_en") > 0 &&
-          col("s_en") === greatest(langs.map { case (l, _) => col(s"s_$l") }: _*)
-        val quality = col("len_score") * 0.35 + col("distinct_ratio") * 0.25 +
-          (lit(1.0) - col("punct_ratio")) * 0.25 + col("stopword_ratio") * 0.15
-        val filtered = scored.filter(isEn)
-          .withColumn("quality", quality)
+          (Seq(col("doc_id"), col("source"), t.as("t")) ++
+            T.qualityComponents(t, ws0, QualityFixture.stops) ++
+            T.markerHits(ws0, langs)): _*)
+        val filtered = scored.filter(T.isEnglish(langs))
+          .withColumn("quality", T.qualityFromComponents)
           .filter(col("quality") >= qualityMin)
           .select("doc_id", "source", "t", "quality")
         val survivors = filtered
@@ -5955,12 +5921,6 @@ object Catalog {
           "llmsplit0", Seq(0.8 -> "train", 0.9 -> "val"), "test")
       },
       Some {
-        val scoreDefs = langs.map { case (lang, ms) =>
-          val lst = ms.map(m => s"'$m'").mkString(", ")
-          s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
-        }.mkString(",\n            ")
-        val mxExpr = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val stopsSql = stops.map(s0 => s"'$s0'").mkString(", ")
         val fracSplit = hashFracSql("CAST(doc_id AS VARCHAR) || '|llmsplit0'")
         s"""
         WITH pool AS (
@@ -5969,21 +5929,13 @@ object Catalog {
         w AS (SELECT doc_id, source, t, string_split(t, ' ') AS ws FROM pool),
         sc AS (
           SELECT doc_id, source, t,
-            least(CAST(len(t) AS DOUBLE) / 500.0, 1.0) AS len_score,
-            CASE WHEN len(ws) = 0 THEN 0.0
-                 ELSE CAST(len(list_distinct(ws)) AS DOUBLE) / CAST(len(ws) AS DOUBLE) END AS distinct_ratio,
-            CASE WHEN len(ws) = 0 THEN 0.0
-                 ELSE CAST(len(list_filter(ws, w -> list_contains([$stopsSql], w))) AS DOUBLE) /
-                      CAST(len(ws) AS DOUBLE) END AS stopword_ratio,
-            CAST(len(t) - len(regexp_replace(t, '[a-z0-9 ]', '', 'g')) AS DOUBLE) /
-              CAST(len(t) AS DOUBLE) AS punct_ratio,
-            $scoreDefs
+            ${QualityFixture.componentsSql("t", "ws")},
+            ${QualityFixture.hitsSql}
           FROM w),
         q AS (
           SELECT doc_id, source, t,
-            len_score * 0.35 + distinct_ratio * 0.25 + (1.0 - punct_ratio) * 0.25 +
-              stopword_ratio * 0.15 AS quality
-          FROM sc WHERE s_en > 0 AND s_en = $mxExpr),
+            ${QualityFixture.qualityFromComponentsSql} AS quality
+          FROM sc WHERE ${QualityFixture.isEnSql}),
         f AS (SELECT doc_id, source, t, quality FROM q WHERE quality >= $qualityMin),
         surv AS (SELECT min(doc_id) AS sdoc_id FROM f GROUP BY md5(t)),
         dd AS (SELECT f.* FROM f JOIN surv ON f.doc_id = surv.sdoc_id),
@@ -6040,33 +5992,21 @@ object Catalog {
   // (broadcast); the doc-level pass is narrow and codegen'd.
   private val p5 = {
     val langs = Dictionaries.langMarkers
-    val stops = Dictionaries.stopwordsEn
     Q(
       "p5_corpus_datasheet",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(s, d)
-        val ws = T.words(col("text"))
-        val scoreCols = langs.map { case (lang, ms) =>
-          size(filter(ws, w => w.isin(ms.map(lit): _*))).as(s"s_$lang") }
-        val mxE = greatest(langs.map { case (l, _) => col(s"s_$l") }: _*)
-        val pick = langs.foldRight(lit("unknown"): Column) {
-          case ((l, _), e) => when(col(s"s_$l") === col("mx"), lit(l)).otherwise(e) }
         val t = T.normKey(col("text"))
-        val wsq = split(t, " ")
-        val lenScore = least(length(t).cast("double") / 500.0, lit(1.0))
-        val punct = (length(t) - length(regexp_replace(t, "[a-z0-9 ]", "")))
-          .cast("double") / length(t).cast("double")
-        val quality = lenScore * 0.35 + T.distinctRatio(wsq) * 0.25 +
-          (lit(1.0) - punct) * 0.25 + T.stopwordRatio(wsq, stops) * 0.15
+        val ws = split(t, " ")
+        val quality = T.quality(t, ws, QualityFixture.stops)
         val base = docs.select(
           (Seq(col("source"), col("text"), col("n_chars"),
             T.tokenCountWs(col("text")).as("n_toks"),
             floor(quality * lit(1000000.0)).cast("long").as("q_micro")) ++
-            scoreCols): _*)
-          .withColumn("mx", mxE)
-          .withColumn("lang_pred",
-            when(col("mx") === 0, "unknown").otherwise(pick))
+            T.markerHits(ws, langs)): _*)
+          .withColumn("mx", T.markerMax(langs))
+          .withColumn("lang_pred", T.langPred(langs))
         val agg = base.groupBy("source").agg(
           count(lit(1)).as("n_docs"),
           sum("n_toks").as("n_tokens"),
@@ -6102,37 +6042,20 @@ object Catalog {
               .as("top_lang_frac"),
             col("p50_chars_est"), col("p95_chars_est"))
       },
-      Some {
-        val scoreDefs = langs.map { case (lang, ms) =>
-          val lst = ms.map(m => s"'$m'").mkString(", ")
-          s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
-        }.mkString(",\n            ")
-        val mxExpr = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val pick = langs.map { case (l, _) => s"WHEN s_$l = mx THEN '$l'" }.mkString(" ")
-        val stopsSql = stops.map(s0 => s"'$s0'").mkString(", ")
-        s"""
+      Some(s"""
         WITH b AS (
           SELECT doc_id, source, text, n_chars, ${normSql("text")} AS t,
                  string_split(${normSql("text")}, ' ') AS ws
           FROM documents),
         sc AS (
           SELECT *, CAST(len(ws) AS BIGINT) AS n_toks,
-            $scoreDefs
+            ${QualityFixture.hitsSql}
           FROM b),
-        m AS (SELECT *, $mxExpr AS mx FROM sc),
+        m AS (SELECT *, ${QualityFixture.maxSql} AS mx FROM sc),
         doc AS (
           SELECT doc_id, source, text, n_chars, n_toks,
-            CASE WHEN mx = 0 THEN 'unknown' $pick ELSE 'unknown' END AS lang_pred,
-            CAST(FLOOR((
-              least(CAST(len(t) AS DOUBLE) / 500.0, 1.0) * 0.35 +
-              (CASE WHEN len(ws) = 0 THEN 0.0
-                    ELSE CAST(len(list_distinct(ws)) AS DOUBLE) / CAST(len(ws) AS DOUBLE) END) * 0.25 +
-              (1.0 - CAST(len(t) - len(regexp_replace(t, '[a-z0-9 ]', '', 'g')) AS DOUBLE) /
-                     CAST(len(t) AS DOUBLE)) * 0.25 +
-              (CASE WHEN len(ws) = 0 THEN 0.0
-                    ELSE CAST(len(list_filter(ws, w -> list_contains([$stopsSql], w))) AS DOUBLE) /
-                         CAST(len(ws) AS DOUBLE) END) * 0.15
-            ) * 1000000.0) AS BIGINT) AS q_micro
+            ${QualityFixture.langPredSql} AS lang_pred,
+            CAST(FLOOR((${QualityFixture.qualitySql("t", "ws")}) * 1000000.0) AS BIGINT) AS q_micro
           FROM m),
         agg AS (
           SELECT source, COUNT(*) AS n_docs,
@@ -6170,8 +6093,7 @@ object Catalog {
           q.p50_chars_est, q.p95_chars_est
         FROM agg a
         JOIN top t ON t.source = a.source
-        JOIN qs q ON q.source = a.source"""
-      })
+        JOIN qs q ON q.source = a.source"""))
   }
 
   // ---------------------------------------------------------------- p2
@@ -6695,10 +6617,7 @@ object Catalog {
   private val s25 = Q(
     "s25_stream_session",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/session_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "session_state")
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"), col("value"))
       val body = graft.streaming.EventStream.sessionFoldBatch(statePath, 30) _
       Seq(
@@ -7463,17 +7382,12 @@ object Catalog {
         val keyed = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"),
             bucket.as("bucket"))
-        val ds = dsScratch(d)
-        val storePath = s"$scratchRoot/$ds/cust_store"
-        val purgedPath = s"$scratchRoot/$ds/cust_store_purged"
         // fresh store per pass: both paths deleted first — idempotency
         // must not hinge on session overwrite modes (the w6 lesson), and
         // purge MOVES dirs out of the store, so a stale purged snapshot
         // would double-count on append
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        Seq(storePath, purgedPath).foreach(p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true))
+        val storePath = freshScratch(s, d, "cust_store")
+        val purgedPath = freshScratch(s, d, "cust_store_purged")
         graft.sources.Sink.writePartitioned(keyed, storePath, Seq("bucket"))
         val store = s.read.schema(storeSchema).parquet(storePath)
         // pre-purge file census (bucket → basenames), captured while the
@@ -7795,10 +7709,7 @@ object Catalog {
       "w12_zorder_maintain",
       (s, d) => {
         val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        val ds = dsScratch(d)
-        val base = s"$scratchRoot/$ds/events_zorder_maint"
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
+        val base = freshScratch(s, d, "events_zorder_maint")
         // day one: first half of the stream, z-clustered
         val half1 = ev.filter(col("event_id") % 2 === 0)
         graft.sources.Sink.writeZordered(half1, s"$base/store", "user_id", "value", nFiles)
@@ -7966,10 +7877,7 @@ object Catalog {
     Q(
       "s28_stream_classifier",
       (s, d) => {
-        val statePath = s"$scratchRoot/${dsScratch(d)}/s28"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+        val statePath = freshScratch(s, d, "s28")
         val feats = graft.operators.Classifier.qualityFeatures(
           Tables.documents(s, d), QualityFixture.stops).persist()
         val cols = graft.operators.Classifier.featCols
@@ -8538,10 +8446,7 @@ object Catalog {
   private val s17 = Q(
     "s17_stream_colloc",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/colloc_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "colloc_state")
       val toks = collocToks(s, d)
       val body = graft.streaming.EventStream.collocFoldBatch(statePath) _
       (0 until 3).foreach(i =>
@@ -9234,10 +9139,7 @@ object Catalog {
   private val s21 = Q(
     "s21_stream_bpe",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/bpe_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "bpe_state")
       val docs = bm25Docs(s, d)
       val body = graft.streaming.EventStream.bpeDictFoldBatch(statePath) _
       (0 until 3).foreach(i =>
@@ -9529,10 +9431,7 @@ object Catalog {
   private val s22 = Q(
     "s22_stream_frontier",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/frontier_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "frontier_state")
       val urls = canonUrls(s, d)
       val body = graft.streaming.EventStream.urlFrontierFoldBatch(statePath) _
       (0 until 3).foreach(i =>
@@ -9797,10 +9696,7 @@ object Catalog {
   private val s23 = Q(
     "s23_stream_growth",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/growth_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "growth_state")
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
       val body = graft.streaming.EventStream.growthFoldBatch(statePath) _
       Seq(
@@ -9922,14 +9818,11 @@ object Catalog {
           .when(col("doc_id") % 3 === 1, upper(col("text")))
           .otherwise(col("text"))
         val ws = split(T.normKey(T.unicodeFold(injected)), " ")
-        val hitCols = langs.map { case (l, ms) =>
-          size(filter(col("ws"), w => w.isin(ms.map(lit): _*))).as(s"s_$l")
-        }
         val scored = fetched
           .select(col("doc_id"), col("domain"), ws.as("ws"))
-          .select((Seq(col("doc_id"), col("domain"), col("ws")) ++ hitCols): _*)
-        val gated = scored.filter(col("s_en") > 0 &&
-            col("s_en") === greatest(langs.map { case (l, _) => col(s"s_$l") }: _*))
+          .select((Seq(col("doc_id"), col("domain"), col("ws")) ++
+            T.markerHits(col("ws"), langs)): _*)
+        val gated = scored.filter(T.isEnglish(langs))
           .select(col("doc_id"), col("domain"), col("ws"))
         val budgeted = Curate.tokenBudgetSample(
           gated, "doc_id", "domain", size(col("ws")).cast("long"),
@@ -9950,14 +9843,7 @@ object Catalog {
             coalesce(col("n_budgeted"), lit(0L)).as("n_budgeted"),
             coalesce(col("n_tokens_budgeted"), lit(0L)).as("n_tokens_budgeted"))
       },
-      Some {
-        val langs = Dictionaries.langMarkers
-        val scoreDefs = langs.map { case (lang, ms) =>
-          val lst = ms.map(m => s"'$m'").mkString(", ")
-          s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
-        }.mkString(",\n            ")
-        val mxExpr = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        s"""
+      Some(s"""
         WITH $urlCanonCtes,
         cd AS (SELECT doc_id, text, curl, $urlDomainSql AS domain FROM canon),
         firstf AS (SELECT MIN(doc_id) AS doc_id FROM cd GROUP BY curl),
@@ -9970,10 +9856,10 @@ object Catalog {
         fw AS (SELECT doc_id, domain,
             string_split(${normSql("nfc_normalize(strip_accents(lower(ti)))")}, ' ') AS ws
           FROM inj),
-        sc AS (SELECT doc_id, domain, ws, $scoreDefs FROM fw),
+        sc AS (SELECT doc_id, domain, ws, ${QualityFixture.hitsSql} FROM fw),
         gated AS (
           SELECT doc_id, domain, CAST(len(ws) AS BIGINT) AS n_tokens
-          FROM sc WHERE s_en > 0 AND s_en = $mxExpr),
+          FROM sc WHERE ${QualityFixture.isEnSql}),
         cum AS (
           SELECT doc_id, domain, n_tokens,
             SUM(n_tokens) OVER (PARTITION BY domain
@@ -9997,8 +9883,7 @@ object Catalog {
         FROM a1
         LEFT JOIN a2 ON a2.domain = a1.domain
         LEFT JOIN a3 ON a3.domain = a1.domain
-        LEFT JOIN a4 ON a4.domain = a1.domain"""
-      })
+        LEFT JOIN a4 ON a4.domain = a1.domain"""))
   }
 
   // ---------------------------------------------------------------- a17
@@ -10561,10 +10446,7 @@ object Catalog {
         // read back — the real lifecycle (the dim is persisted state,
         // not a view), and what keeps the audit gates from re-deriving
         // the SCD2 window chains once per exceptAll leg
-        val root = s"$scratchRoot/${dsScratch(d)}/bitemporal"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = freshScratch(s, d, "bitemporal")
         val obs = Tables.orders(s, d).select(col("o_custkey"),
           col("o_orderdate"), col("o_orderkey"),
           col("o_orderstatus"), col("o_orderpriority"))
@@ -10686,10 +10568,7 @@ object Catalog {
   private val s24 = Q(
     "s24_stream_correlation",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/corr_state"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "corr_state")
       val li = Tables.lineitem(s, d)
       val body = graft.streaming.EventStream.correlationFoldBatch(
         statePath, corrCols, DecM) _
@@ -10782,17 +10661,7 @@ object Catalog {
           WHERE doc_id NOT IN (SELECT id FROM dropped)),
         scoredn AS (
           SELECT doc_id, domain, t,
-            least(CAST(len(t) AS DOUBLE) / 500.0, 1.0) * 0.35 +
-            (CASE WHEN len(ws) = 0 THEN 0.0
-                  ELSE CAST(len(list_distinct(ws)) AS DOUBLE) /
-                       CAST(len(ws) AS DOUBLE) END) * 0.25 +
-            (1.0 - CAST(len(t) - len(regexp_replace(t, '[a-z0-9 ]', '', 'g'))
-                     AS DOUBLE) / CAST(len(t) AS DOUBLE)) * 0.25 +
-            (CASE WHEN len(ws) = 0 THEN 0.0
-                  ELSE CAST(len(list_filter(ws,
-                         w -> list_contains([${QualityFixture.stopsSql}], w)))
-                         AS DOUBLE) / CAST(len(ws) AS DOUBLE) END) * 0.15
-              AS quality
+            ${QualityFixture.qualitySql("t", "ws")} AS quality
           FROM (SELECT doc_id, domain, t, string_split(t, ' ') AS ws
                 FROM novel) z),
         adm AS (SELECT * FROM scoredn WHERE quality >= $refreshQThresh),
@@ -10818,10 +10687,7 @@ object Catalog {
       "p7_corpus_refresh",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val root = s"$scratchRoot/${dsScratch(d)}/refresh"
-        val pfs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        pfs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = freshScratch(s, d, "refresh")
         // each stage's output is WRITTEN and read back — refresh stages
         // are persisted intake state in production (the frontier diff
         // and the dedup verdicts are audit artifacts), and staging keeps
@@ -10845,16 +10711,9 @@ object Catalog {
           old.select(col("doc_id").as("id"), col("t")),
           "id", "t", shingleN = 3, k = 16, bands = 4, threshold = 0.8,
           maxBucket = 1000), "novel")
-        val ws = split(col("t"), " ")
-        val lenScore = least(length(col("t")).cast("double") / 500.0, lit(1.0))
-        val punct = (length(col("t")) -
-          length(regexp_replace(col("t"), "[a-z0-9 ]", "")))
-          .cast("double") / length(col("t")).cast("double")
         val admitted = novel
           .withColumn("quality",
-            lenScore * 0.35 + T.distinctRatio(ws) * 0.25 +
-              (lit(1.0) - punct) * 0.25 +
-              T.stopwordRatio(ws, QualityFixture.stops) * 0.15)
+            T.quality(col("t"), split(col("t"), " "), QualityFixture.stops))
           .filter(col("quality") >= qThresh)
         require(admitted.limit(1).count() > 0,
           "the refresh must admit at least one document")
@@ -10882,9 +10741,10 @@ object Catalog {
   // the trigger-cadence intake feeding it). ONE foreachBatch body runs
   // the whole funnel per trigger: s22's frontier fold (extended with
   // the winning doc id) dedups against every prior trigger, the t19
-  // fold + p6's language gate pass only docs whose ENGLISH is the
-  // strict marker argmax after accent folding, t2's exact quality
-  // formula gates the folded text, and the survivors publish as a new
+  // fold + p6's language gate pass only docs whose ENGLISH marker count
+  // is a maximum after accent folding (ties admitted; `en` is listed
+  // first, so t1's pick agrees), t2's exact quality formula gates the
+  // folded text, and the survivors publish as a new
   // ManifestStore version (s9's discipline — every prior version stays
   // readable, retried trigger ids are no-ops). FIXTURE: page keys are
   // BANDED by corpus third (each trigger crawls a new site section,
@@ -10905,10 +10765,7 @@ object Catalog {
     Q(
       "p8_stream_corpus",
       (s, d) => {
-        val root = s"$scratchRoot/${dsScratch(d)}/p8"
-        val pfs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        pfs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = freshScratch(s, d, "p8")
         val nDocs = Tables.documents(s, d)
           .agg(max(col("doc_id"))).head.getLong(0) + 1
         val band = expr(s"doc_id * 3 div $nDocs")
@@ -10949,12 +10806,6 @@ object Catalog {
             coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
       },
       Some {
-        val langs = Dictionaries.langMarkers
-        val scoreDefs = langs.map { case (lang, ms) =>
-          val lst = ms.map(m => s"'$m'").mkString(", ")
-          s"len(list_filter(ws, w -> list_contains([$lst], w))) AS s_$lang"
-        }.mkString(",\n            ")
-        val mxExpr = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
         val p8Key = """CAST(CASE WHEN doc_id % 7 = 3 THEN doc_id % 20
           ELSE (doc_id * 3 // (SELECT MAX(doc_id) + 1 FROM documents)) * 100
             + doc_id % 20 END AS VARCHAR)"""
@@ -10972,21 +10823,11 @@ object Catalog {
             ${normSql("nfc_normalize(strip_accents(lower(ti)))")} AS tf
           FROM inj),
         w2 AS (SELECT doc_id, domain, tf, string_split(tf, ' ') AS ws FROM fw),
-        sc AS (SELECT doc_id, domain, tf, ws, $scoreDefs FROM w2),
+        sc AS (SELECT doc_id, domain, tf, ws, ${QualityFixture.hitsSql} FROM w2),
         gated AS (SELECT doc_id, domain, tf, ws FROM sc
-          WHERE s_en > 0 AND s_en = $mxExpr),
+          WHERE ${QualityFixture.isEnSql}),
         q AS (SELECT doc_id, domain, CAST(len(ws) AS BIGINT) AS n_tokens,
-            least(CAST(len(tf) AS DOUBLE) / 500.0, 1.0) * 0.35 +
-            (CASE WHEN len(ws) = 0 THEN 0.0
-                  ELSE CAST(len(list_distinct(ws)) AS DOUBLE) /
-                       CAST(len(ws) AS DOUBLE) END) * 0.25 +
-            (1.0 - CAST(len(tf) - len(regexp_replace(tf, '[a-z0-9 ]', '', 'g'))
-                     AS DOUBLE) / CAST(len(tf) AS DOUBLE)) * 0.25 +
-            (CASE WHEN len(ws) = 0 THEN 0.0
-                  ELSE CAST(len(list_filter(ws,
-                         w -> list_contains([${QualityFixture.stopsSql}], w)))
-                         AS DOUBLE) / CAST(len(ws) AS DOUBLE) END) * 0.15
-              AS quality
+            ${QualityFixture.qualitySql("tf", "ws")} AS quality
           FROM gated),
         kept AS (SELECT domain, n_tokens FROM q WHERE quality >= $qThresh),
         f1 AS (SELECT domain, COUNT(*) AS n_fetched,
@@ -11028,10 +10869,7 @@ object Catalog {
   private val s26 = Q(
     "s26_stream_admission",
     (s, d) => {
-      val root = s"$scratchRoot/${dsScratch(d)}/s26"
-      val pfs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      pfs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = freshScratch(s, d, "s26")
       val staged = refreshStagedFrame(s, d).persist()
       staged.filter(col("doc_id") % 5 =!= 4)
         .write.mode("overwrite").parquet(s"$root/store")
@@ -11090,10 +10928,7 @@ object Catalog {
   private val s27 = Q(
     "s27_stream_volume",
     (s, d) => {
-      val statePath = s"$scratchRoot/${dsScratch(d)}/s27"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
+      val statePath = freshScratch(s, d, "s27")
       val ev = q5Events(s, d)
       val body = graft.streaming.EventStream.volumeFoldBatch(statePath) _
       (0 until 3).foreach(i =>

@@ -722,17 +722,23 @@ object EventStream {
    */
   def urlFrontierFoldBatch(statePath: String, nBuckets: Int = 16)(
       batch: DataFrame, batchId: Long): Unit = {
-    val contrib = batch.groupBy("curl", "domain")
-      .agg(count(lit(1)).as("n_total"))
-      .withColumn("first_trigger", lit(batchId))
-      .withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets))
-    FrontierState.foldPublish(statePath, batchId, contrib,
-      frontierStateSchema) { (base, delta) =>
-      base.unionByName(delta)
-        .groupBy("curl", "domain", "bucket")
-        .agg(sum(col("n_total")).as("n_total"),
-          min(col("first_trigger")).as("first_trigger"))
-    }
+    // the contribution is staged as a lineage cut whose job also returns
+    // the distinct buckets it touches, so the publish needs no collect
+    val (contrib, affected) = Lineage.measured(
+      batch.groupBy("curl", "domain")
+        .agg(count(lit(1)).as("n_total"))
+        .withColumn("first_trigger", lit(batchId))
+        .withColumn("bucket", FrontierState.bucketOf(col("curl"), nBuckets)),
+      Side.distinct("bucket"))
+    try {
+      FrontierState.foldPublish(statePath, batchId, contrib.df,
+        frontierStateSchema, affected) { (base, delta) =>
+        base.unionByName(delta)
+          .groupBy("curl", "domain", "bucket")
+          .agg(sum(col("n_total")).as("n_total"),
+            min(col("first_trigger")).as("first_trigger"))
+      }
+    } finally contrib.release()
   }
 
   /**
@@ -751,7 +757,8 @@ object EventStream {
    *      n_total, bucket).
    *   2. t19 FOLD + LANGUAGE GATE (p6's exact stages): the fixture
    *      injection by doc_id%3, unicode fold, marker scoring, keep iff
-   *      English is the strict argmax with at least one hit.
+   *      English is a maximum with at least one hit (ties admitted;
+   *      `en` is listed first, so t1's pick agrees).
    *   3. QUALITY GATE (t2's exact formula over the FOLDED normalized
    *      text): 0.35·len + 0.25·distinct + 0.25·(1−punct) +
    *      0.15·stopword ≥ minQuality.
@@ -832,7 +839,7 @@ object EventStream {
     // slice curl contributes a row), so ONE bucket set and ONE
     // bucket-pruned read serve both the anti-join and the fold
     FrontierState.foldPublish(frontierRoot, batchId, slicePart,
-      crawlFrontierSchema, base, Some(affected)) { (b, d) =>
+      crawlFrontierSchema, affected, base) { (b, d) =>
       b.unionByName(d)
         .groupBy("curl", "domain", "bucket")
         .agg(min(col("first_doc_id")).as("first_doc_id"),
@@ -847,24 +854,14 @@ object EventStream {
     val tf = T.normKey(T.unicodeFold(injected))
     val scoredBase = fresh.select(col("doc_id"), col("curl"), col("domain"),
       tf.as("tf"), split(tf, " ").as("ws"))
-    val hitCols = markers.map { case (l, ms) =>
-      size(filter(col("ws"), w => w.isin(ms.map(lit): _*))).as(s"s_$l")
-    }
     val scored = scoredBase.select(
       (Seq(col("doc_id"), col("curl"), col("domain"), col("tf"), col("ws")) ++
-        hitCols): _*)
-    val gated = scored.filter(col("s_en") > 0 &&
-      col("s_en") === greatest(markers.map { case (l, _) => col(s"s_$l") }: _*))
+        T.markerHits(col("ws"), markers)): _*)
+    val gated = scored.filter(T.isEnglish(markers))
 
     // 3. t2's quality formula over the folded text
-    val lenScore = least(length(col("tf")).cast("double") / 500.0, lit(1.0))
-    val punctRatio = (length(col("tf")) -
-      length(regexp_replace(col("tf"), "[a-z0-9 ]", "")))
-      .cast("double") / length(col("tf")).cast("double")
-    val quality = lenScore * 0.35 + T.distinctRatio(col("ws")) * 0.25 +
-      (lit(1.0) - punctRatio) * 0.25 + T.stopwordRatio(col("ws"), stops) * 0.15
     val kept = gated
-      .withColumn("quality", quality)
+      .withColumn("quality", T.quality(col("tf"), col("ws"), stops))
       .filter(col("quality") >= minQuality)
       .select(col("doc_id"), col("curl"), col("domain"),
         size(col("ws")).cast("long").as("n_tokens"), col("quality"))
@@ -1004,7 +1001,7 @@ object EventStream {
       // the anti-join's read)
       FrontierState.foldPublish(seenRoot, batchId,
         unseen.select(col("curl"), col("bucket")), admissionSeenSchema,
-        affected = Some(unseenBuckets))((base, delta) => base.unionByName(delta))
+        unseenBuckets)((base, delta) => base.unionByName(delta))
       // this anti-join scans the store's whole curl column every trigger
       val fresh = stage(unseen.drop("bucket")
         .join(store.select("curl"), Seq("curl"), "left_anti"))
@@ -1020,12 +1017,7 @@ object EventStream {
         "id", "t", shingleN, k, bands, threshold, maxBucket)
       // C. t2's quality formula over the staged text
       val ws = split(col("t"), " ")
-      val lenScore = least(length(col("t")).cast("double") / 500.0, lit(1.0))
-      val punct = (length(col("t")) -
-        length(regexp_replace(col("t"), "[a-z0-9 ]", "")))
-        .cast("double") / length(col("t")).cast("double")
-      val admitted = lenScore * 0.35 + T.distinctRatio(ws) * 0.25 +
-        (lit(1.0) - punct) * 0.25 + T.stopwordRatio(ws, stops) * 0.15 >= minQuality
+      val admitted = T.quality(col("t"), ws, stops) >= minQuality
       // trigger ledger: the per-domain funnel counts as ONE aggregate over
       // the union of its three levels. Domains come from the slice; the
       // fresh and novel levels drop null domains, as equi-joins from the

@@ -66,10 +66,6 @@ object FrontierState {
       schema: String, buckets: Set[Long]): DataFrame =
     ManifestStore.readVersionBuckets(spark, root, v, schema, "bucket", buckets)
 
-  /** Distinct buckets a contribution touches (driver-side, O(spread)). */
-  def affectedBuckets(contrib: DataFrame): Set[Long] =
-    contrib.select(col("bucket")).distinct().collect().map(_.getLong(0)).toSet
-
   /**
    * Fold trigger `batchId`'s contribution into the chain. `contrib`
    * rows must already carry their `bucket` column and be folded within
@@ -77,28 +73,28 @@ object FrontierState {
    * affected buckets' prior rows with the contribution into those
    * buckets' complete new content — it must be the associative fold
    * whose trigger-order chain equals the one-shot batch build (the s5
-   * discipline). `base` may be passed pre-read when the caller already
-   * fetched the affected buckets for its own anti-join; it must then
-   * be exactly the prior head's rows in `contrib`'s buckets.
+   * discipline). `affected` is exactly the set of `contrib`'s buckets;
+   * callers take it from the job that stages `contrib`
+   * ([[graft.util.Side.distinct]]), so no collect re-derives it. `base`
+   * may be passed pre-read when the caller already fetched the affected
+   * buckets for its own anti-join; it must then be exactly the prior
+   * head's rows in `contrib`'s buckets.
    */
   def foldPublish(root: String, batchId: Long, contrib: DataFrame,
-      schema: String, base: Option[DataFrame] = None,
-      affected: Option[Set[Long]] = None)
+      schema: String, affected: Set[Long], base: Option[DataFrame] = None)
       (fold: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = contrib.sparkSession
     val v = version(batchId)
     val versions = ManifestStore.listVersions(spark, root)
     if (versions.contains(v)) return // committed by a prior attempt
-    // ONE driver-side bucket collect per trigger: it doubles as the
-    // empty-contribution signal (no buckets touched → carry) and is
-    // passed through to the publish gate so nothing re-derives it.
+    // The affected set doubles as the empty-contribution signal (no
+    // buckets touched → carry) and is passed through to the publish gate.
     // The pre-write repartition(bucket) keeps one file per touched
     // bucket per version — without it every shuffle partition writes
     // its own sliver into every bucket dir it holds rows for (measured
     // 3.9x on s22's trigger loop at sf0.1 from tiny-file explosion
     // alone); at scale AQE sizes the shuffle so a hot bucket still
     // splits across tasks by bytes.
-    val aff = affected.getOrElse(affectedBuckets(contrib))
     if (versions.isEmpty) {
       require(batchId == 0,
         s"trigger $batchId arrived before any state was initialized")
@@ -106,12 +102,12 @@ object FrontierState {
         contrib.repartition(col("bucket")), root, v, "bucket")
     } else {
       val prevV = version(batchId - 1)
-      if (aff.isEmpty) ManifestStore.publishCarry(spark, root, prevV, v)
+      if (affected.isEmpty) ManifestStore.publishCarry(spark, root, prevV, v)
       else {
-        val b = base.getOrElse(readBuckets(spark, root, prevV, schema, aff))
+        val b = base.getOrElse(readBuckets(spark, root, prevV, schema, affected))
         ManifestStore.publishDeltaMerged(
           spark, fold(b, contrib).repartition(col("bucket")), root, prevV, v,
-          "bucket", Some(aff.map(_.asInstanceOf[Any])))
+          "bucket", Some(affected.map(_.asInstanceOf[Any])))
       }
     }
   }

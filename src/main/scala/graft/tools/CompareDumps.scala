@@ -1,10 +1,14 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
 
 /** Dev-only: bit-compare two Verify output dirs (args: dirA dirB name...).
+  * Names that are not directories under dirA (a Verify dir's
+  * `oracle_sql.json`) are skipped, so `$(ls dirA)` serves as the list.
   * Canonicalizes exactly like the driver's gate: columns sorted by name,
   * rows sorted by every column, values via toString (distinct per double
   * bit pattern) — so "identical" here means hash-identical at the gate. */
@@ -28,7 +32,7 @@ object CompareDumps {
         .toSeq.sorted
     }
     var bad = 0
-    names.foreach { n =>
+    names.filter(n => Files.isDirectory(Paths.get(dirA, n))).foreach { n =>
       val (a, b) = (canon(s"$dirA/$n"), canon(s"$dirB/$n"))
       val same = a == b
       if (!same) {

@@ -1047,8 +1047,30 @@ class StreamingSpec extends AnyFunSuite {
       Seq(("https://a.com/x", "a.com"), ("https://b.com/y", "b.com")),
       Seq(("https://a.com/x", "a.com"), ("https://b.com/y", "b.com"),
         ("https://c.com/z", "c.com")))
-    val root = java.nio.file.Files.createTempDirectory("s22spec").toString + "/fr"
+    val dir = java.nio.file.Files.createTempDirectory("s22spec").toString
+    val root = dir + "/fr"
     val input = MemoryStream[(String, String)]
+    // every action the triggers run, by name: the bucket set must come
+    // from the contribution's own job, never from a collect. Registered
+    // before the query starts: the stream runs its batches in a clone of
+    // the session, which copies the listeners the session has then.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(qe.analyzed match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toString.endsWith("/marker") => "marker"
+          case _ => funcName
+        })
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    spark.listenerManager.register(listener)
     var version = -1
     val query = input.toDF().toDF("curl", "domain")
       .writeStream
@@ -1064,7 +1086,15 @@ class StreamingSpec extends AnyFunSuite {
       def state(after: Int) = FrontierState.read(spark, root, after.toLong,
           EventStream.frontierStateSchema)
         .collect().map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet
-      triggers.foreach { t => input.addData(t: _*); query.processAllAvailable() }
+      try {
+        triggers.foreach { t => input.addData(t: _*); query.processAllAvailable() }
+        // listener events arrive in order: once this marker write is seen,
+        // every trigger action before it has been recorded
+        spark.range(1).toDF("marker").write.mode("overwrite").parquet(s"$dir/marker")
+        eventually(timeout(30.seconds)) { assert(actions.contains("marker")) }
+      } finally spark.listenerManager.unregister(listener)
+      assert(!actions.contains("collect"),
+        s"a trigger must take its bucket set from its cut, not collect it: $actions")
       assert(state(0) == Set(("https://a.com/x", 2L, 0L)))
       assert(state(2) == Set(
         ("https://a.com/x", 4L, 0L),   // seen every trigger; first stays 0

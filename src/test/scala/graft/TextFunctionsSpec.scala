@@ -31,6 +31,41 @@ class TextFunctionsSpec extends AnyFunSuite {
 
   implicit class Inspect(s: String) { def inspect: String = s.replace("\n", "\\n").replace("\t", "\\t") }
 
+  test("curation gate: an en tie is admitted, zero hits are rejected, t2 scores are exact") {
+    val markers = graft.config.Dictionaries.langMarkers
+    val stops = graft.config.Dictionaries.stopwordsEn
+    val ws = split(col("t"), " ")
+    // (admitted, t1's pick): en ties de, no marker hits, de beats en,
+    // fr beats en
+    val gate = Seq("the der cat", "zzz yyy", "der und the", "the fast le la et")
+      .toDF("t").select((col("t") +: T.markerHits(ws, markers)): _*)
+      .withColumn("mx", T.markerMax(markers))
+      .select(col("t"), T.isEnglish(markers), T.langPred(markers))
+      .collect().map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2))).toMap
+    assert(gate == Map(
+      "the der cat" -> (true, "en"),
+      "zzz yyy" -> (false, "unknown"),
+      "der und the" -> (false, "de"),
+      "the fast le la et" -> (false, "fr")))
+    // 0.35·len/500 + 0.25·distinct + 0.25·(1 − punct) + 0.15·stopword,
+    // in the builder's evaluation order; punct_ratio counts the chars
+    // that the [a-z0-9 ] class matches (11 of 12, then 10 of 10)
+    val expected = Map(
+      "the cat sat." -> ((12.0 / 500.0) * 0.35 + (3.0 / 3.0) * 0.25 +
+        (1.0 - 11.0 / 12.0) * 0.25 + (1.0 / 3.0) * 0.15),
+      "a a a of b" -> ((10.0 / 500.0) * 0.35 + (3.0 / 5.0) * 0.25 +
+        (1.0 - 10.0 / 10.0) * 0.25 + (4.0 / 5.0) * 0.15))
+    val got = expected.keys.toSeq.toDF("t")
+      .select((col("t") +: T.qualityComponents(col("t"), ws, stops) :+
+        T.quality(col("t"), ws, stops).as("inline")): _*)
+      .withColumn("quality", T.qualityFromComponents)
+      .collect().map(r => r.getString(0) ->
+        (r.getAs[Double]("inline"), r.getAs[Double]("quality"))).toMap
+    expected.foreach { case (t, q) =>
+      assert(got(t) == (q, q), s"quality of '$t'")
+    }
+  }
+
   test("hashKey is md5 of '|'-joined normalized components, order-sensitive") {
     val pairs = Seq(("Acme  Corp", " data ENGINEER"), ("a", "b"), ("b", "a"), (" ", ""))
     val got = pairs.toDF("a", "b")
