@@ -5755,7 +5755,8 @@ object Catalog {
         body(b.filter(dayofmonth(col("ts")) >= d1 && dayofmonth(col("ts")) < d2),
           i.toLong)
       }
-      val bHist = s.read.schema(Q3.stateSchema).parquet(s"$statePath/v3")
+      val bHist = graft.streaming.EventStream.histogramState(Q3.stateSchema)
+        .read(s, statePath, 3)
       val aHist = graft.operators.Checks.histogram(
         ev.filter(col("ts") < lit(Q3.split).cast("timestamp")),
         "event_type", "value", Q3.binW.toDouble, "_ca")
@@ -5792,9 +5793,7 @@ object Catalog {
       (0 until 3).foreach { i => // %3==0 splits as vec_id%9 ∈ {0,3,6}
         body(cur.filter(col("vec_id") % 9 === 3 * i).select("embedding"), i.toLong)
       }
-      val curCells = s.read
-        .schema(graft.streaming.VectorStream.cellsStateSchema)
-        .parquet(s"$statePath/v3")
+      val curCells = graft.streaming.VectorStream.cellsState.read(s, statePath, 3)
       val refCells = graft.operators.Checks.embeddingCells(
         planted.filter(!col("_cur")), "embedding", "_sr", "n_ref")
       val cells = refCells.join(curCells, Seq("dim"), "full_outer")
@@ -6625,11 +6624,11 @@ object Catalog {
         ev.filter(col("ts") >= lit(S5Cuts(0)) && col("ts") < lit(S5Cuts(1))),
         ev.filter(col("ts") >= lit(S5Cuts(1))))
         .zipWithIndex.foreach { case (b, i) => body(b, i.toLong) }
-      val sch = graft.streaming.EventStream.sessionStateSchema
+      val st = graft.streaming.EventStream.sessionState
       val ledger = (0 until 3)
-        .map(i => s.read.schema(sch).parquet(s"$statePath/ledger_b$i"))
+        .map(i => s.read.schema(st.schema).parquet(s"$statePath/ledger_b$i"))
         .reduce(_ unionAll _)
-      val open = s.read.schema(sch).parquet(s"$statePath/state_v3")
+      val open = st.read(s, statePath, 3)
       ledger.unionAll(open).select(
         col("user_id"),
         date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
@@ -8452,9 +8451,8 @@ object Catalog {
       (0 until 3).foreach(i =>
         body(toks.filter(col("doc_id") % 3 === i).select("ws"), i.toLong))
       collocScore(
-        s.read.schema("w STRING, c1 BIGINT").parquet(s"$statePath/uni_v3"),
-        s.read.schema("w1 STRING, w2 STRING, n_xy BIGINT")
-          .parquet(s"$statePath/bi_v3"))
+        graft.streaming.EventStream.collocUniState.read(s, statePath, 3),
+        graft.streaming.EventStream.collocBiState.read(s, statePath, 3))
     },
     Some(collocOracleSql))
 
@@ -9145,8 +9143,7 @@ object Catalog {
       (0 until 3).foreach(i =>
         body(docs.filter(col("doc_id") % 3 === i).select("w"), i.toLong))
       graft.operators.Tokenizer.trainBpeFromCounts(
-        s.read.schema("word STRING, cnt BIGINT")
-          .parquet(s"$statePath/dict_v3"),
+        graft.streaming.EventStream.bpeDictState.read(s, statePath, 3),
         BpeFix.vocabCap, BpeFix.rounds, BpeFix.topPairs)
     },
     Some(bpeTrainOracleSql))
@@ -9706,9 +9703,7 @@ object Catalog {
         case (b, i) => body(b, i.toLong)
       }
       graft.operators.Temporal.growthLedgerFinish(
-        s.read.schema("day DATE, n_active BIGINT, n_new BIGINT, " +
-            "n_retained BIGINT, n_resurrected BIGINT")
-          .parquet(s"$statePath/ledger_v3"))
+        graft.streaming.EventStream.growthLedger.read(s, statePath, 3))
     },
     Some(growthOracleSql))
 
@@ -10577,7 +10572,8 @@ object Catalog {
       val momSchema = graft.operators.Profile.correlationMoments(
         li.limit(0), corrCols, DecM).schema
       graft.operators.Profile.correlationFromMoments(
-        s.read.schema(momSchema).parquet(s"$statePath/mom_v3"), corrCols)
+        graft.streaming.EventStream.correlationState(momSchema)
+          .read(s, statePath, 3), corrCols)
     },
     Some(corrOracleSql))
 
@@ -10933,9 +10929,7 @@ object Catalog {
       val body = graft.streaming.EventStream.volumeFoldBatch(statePath) _
       (0 until 3).foreach(i =>
         body(ev.filter(col("event_id") % 3 === i), i.toLong))
-      val daily = s.read
-        .schema(graft.streaming.EventStream.volumeStateSchema)
-        .parquet(s"$statePath/daily_v3")
+      val daily = graft.streaming.EventStream.volumeState.read(s, statePath, 3)
       q5RequireFlagged(graft.operators.Checks.volumeAnomalyFromDaily(
         daily, "event_type", 7, 50))
     },

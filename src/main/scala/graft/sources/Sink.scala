@@ -134,15 +134,22 @@ object Sink {
     // write BEFORE any rename: the scan's file listing points into the
     // old store, which must stay intact until this action completes
     survivors.write.mode("append").partitionBy(partitionCol).parquet(newPath)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(newPath))
+    carryForward(spark, storePath, newPath, partitionCol, affected)
+  }
+
+  /** RENAME every `partitionCol=` dir of `storePath` not in `affected` into
+    * `newPath`, on the store path's own filesystem (not the default one). */
+  private def carryForward(spark: SparkSession, storePath: String, newPath: String,
+      partitionCol: String, affected: Set[Any]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val base = new Path(storePath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new Path(newPath))
     fs.listStatus(base).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
       .filterNot(p => affected.exists(v => p.getName == s"$partitionCol=$v"))
       .foreach { p =>
-        if (!fs.rename(p, new org.apache.hadoop.fs.Path(newPath, p.getName)))
+        if (!fs.rename(p, new Path(newPath, p.getName)))
           throw new IllegalStateException(s"carry-forward rename failed: $p")
       }
   }
@@ -228,17 +235,7 @@ object Sink {
       dv)
     assertPartitionPruned(survivors, partitionCol)
     survivors.write.mode("append").partitionBy(partitionCol).parquet(newPath)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(newPath))
-    fs.listStatus(base).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
-      .filterNot(p => affected.exists(v => p.getName == s"$partitionCol=$v"))
-      .foreach { p =>
-        if (!fs.rename(p, new org.apache.hadoop.fs.Path(newPath, p.getName)))
-          throw new IllegalStateException(s"carry-forward rename failed: $p")
-      }
+    carryForward(spark, storePath, newPath, partitionCol, affected)
   }
 
   /** THROW unless `df`'s scan prunes on `partitionCol` — i.e. some file

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.types.StructType
 
 import graft.util.{Cut, Lineage, Side}
 
@@ -15,8 +16,6 @@ case class UpsertState(
     latest_ts: Timestamp, latest_event_id: Long,
     event_type: String, value: Double)
 
-/** Per-key last-op state for [[EventStream.cdcState]] — delete ops stay
-  * in state as tombstones (see the method's scaladoc for why). */
 /** [[EventStream.runningFunnel]]'s per-key state: the furthest funnel
   * step reached so far — the ONLY state the ordered-fold semantics
   * needs, which is what makes a streaming funnel over a billion keys
@@ -29,6 +28,8 @@ case class GapFillState(lastDay: String, lastValue: Double)
 
 case class CooccurState(users: Seq[Long])
 
+/** Per-key last-op state for [[EventStream.cdcState]] — delete ops stay
+  * in state as tombstones (see the method's scaladoc for why). */
 case class CdcOpState(
     latest_ts: Timestamp, latest_event_id: Long,
     op: String, value: Double)
@@ -275,26 +276,6 @@ object EventStream {
   }
 
   /**
-   * foreachBatch body of the STREAMING drift monitor (catalog
-   * s7_stream_drift — q3's live twin): each trigger's rows are binned
-   * into (group, _bin, _cb) histogram cells
-   * (graft.operators.Checks.histogram) and folded into a VERSIONED
-   * cumulative histogram — `statePath/v{batchId+1}` is written by
-   * reading `v{batchId}` and summing the trigger's cells in
-   * (mergeStateVersion's write-new-then-swap discipline: a reader never
-   * sees a half-folded state, the previous version stays queryable).
-   *
-   * Scale + delivery notes: the state is the CONTRACTED relation —
-   * groups × bins rows, not events — so each fold is a tiny aggregate
-   * regardless of trigger volume; and because v{batchId+1} is written by
-   * deterministic OVERWRITE from v{batchId} + the batch, a foreachBatch
-   * RETRY of the same batchId rewrites the identical version — the fold
-   * is idempotent, giving effectively-once state without a transaction
-   * log. Histogram merge is associative/commutative, so any trigger
-   * slicing of the stream folds to the same final state (the catalog
-   * twin proves three time slices == q3's one-shot scan, bit-for-bit).
-   */
-  /**
    * Streaming publish into the MANIFEST chain — s5's discipline (each
    * trigger folds its latest-state delta into the previous version and
    * publishes the next) against the SHARED-FILE store instead of the
@@ -315,23 +296,39 @@ object EventStream {
    * table formats treat failed commits.
    */
   def manifestPublishBatch(root: String, nBuckets: Int, schema: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+      batch: DataFrame, batchId: Long): Unit =
+    publishTrigger(root, batchId, latestBucketed(batch, nBuckets), "user_id",
+      manifestPayload, schema)
+
+  private val manifestPayload = Seq("event_type", "value")
+
+  /** s9/s11's delta: the latest payload per user_id plus its `|mb` bucket. */
+  private def latestBucketed(batch: DataFrame, nBuckets: Int): DataFrame =
+    graft.operators.Upsert
+      .latestState(batch, "user_id", "ts", "event_id", manifestPayload)
+      .withColumn("bucket", floor(graft.operators.Curate.hashFraction(
+        concat(col("user_id").cast("string"), lit("|mb"))) * nBuckets).cast("long"))
+
+  /** COMMITTED-RETRY publish of trigger `batchId`'s version: skipped if the
+    * chain at `root` holds it, else (after `beforeStage` sees the chain's
+    * versions) published whole on an empty chain or folded onto the head
+    * by `key`. Returns the version name. */
+  private def publishTrigger(root: String, batchId: Long, delta: DataFrame,
+      key: String, payload: Seq[String], schema: String,
+      beforeStage: Seq[String] => Unit = _ => ()): String = {
     import graft.sources.ManifestStore
-    val spark = batch.sparkSession
-    val payload = Seq("event_type", "value")
-    val bucket = floor(graft.operators.Curate.hashFraction(
-      concat(col("user_id").cast("string"), lit("|mb"))) * nBuckets).cast("long")
-    val delta = graft.operators.Upsert
-      .latestState(batch, "user_id", "ts", "event_id", payload)
-      .withColumn("bucket", bucket)
-    val version = f"v$batchId%05d"
+    val spark = delta.sparkSession
+    val version = FrontierState.version(batchId)
     val versions = ManifestStore.listVersions(spark, root)
-    if (versions.contains(version)) () // committed by a prior attempt
-    else if (versions.isEmpty)
-      ManifestStore.publishInitial(spark, delta, root, version, "bucket")
-    else
-      ManifestStore.publishDelta(spark, delta, root, versions.last, version,
-        "bucket", "user_id", payload, schema)
+    if (!versions.contains(version)) {
+      beforeStage(versions)
+      if (versions.isEmpty)
+        ManifestStore.publishInitial(spark, delta, root, version, "bucket")
+      else
+        ManifestStore.publishDelta(spark, delta, root, versions.last, version,
+          "bucket", key, payload, schema)
+    }
+    version
   }
 
   /**
@@ -365,25 +362,12 @@ object EventStream {
       acceptedTypes: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
     import graft.sources.ManifestStore
     val spark = batch.sparkSession
-    val payload = Seq("event_type", "value")
-    val version = f"v$batchId%05d"
     val mainHead = ManifestStore.branchHead(spark, root, "main")
-    if (mainHead.contains(version)) return // committed by a prior attempt
-    val versions = ManifestStore.listVersions(spark, root)
-    if (!versions.contains(version)) {
-      require(mainHead.forall(h => versions.lastOption.contains(h)),
-        s"stage must build on main's head: main=$mainHead versions=$versions")
-      val bucket = floor(graft.operators.Curate.hashFraction(
-        concat(col("user_id").cast("string"), lit("|mb"))) * nBuckets).cast("long")
-      val delta = graft.operators.Upsert
-        .latestState(batch, "user_id", "ts", "event_id", payload)
-        .withColumn("bucket", bucket)
-      if (versions.isEmpty)
-        ManifestStore.publishInitial(spark, delta, root, version, "bucket")
-      else
-        ManifestStore.publishDelta(spark, delta, root, versions.last, version,
-          "bucket", "user_id", payload, schema)
-    }
+    if (mainHead.contains(FrontierState.version(batchId))) return // already committed
+    val version = publishTrigger(root, batchId, latestBucketed(batch, nBuckets),
+      "user_id", manifestPayload, schema, versions =>
+        require(mainHead.forall(h => versions.lastOption.contains(h)),
+          s"stage must build on main's head: main=$mainHead versions=$versions"))
     ManifestStore.setBranch(spark, root, "audit", version)
     val prevFiles: Set[String] = mainHead
       .map(h => ManifestStore.readManifest(spark, root, h).toSet)
@@ -403,34 +387,12 @@ object EventStream {
     } else {
       val keep = ManifestStore.listVersions(spark, root).filterNot(_ == version)
       if (keep.isEmpty) { // a poisoned FIRST trigger: wipe the embryonic store
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       } else ManifestStore.vacuum(spark, root, keep)
     }
   }
 
-  /**
-   * STREAMING GAP-FILL (a13's stateful twin): per-user daily aggregates
-   * arrive over triggers; every emitted series row is APPEND-final —
-   * fills for the gap (last observed day, new day) carry the stored
-   * value with n_events = 0 / observed = false / their staleness, then
-   * the observed day emits and becomes the new state. The state is TWO
-   * fields per user (last day, last value) — constant, no retained rows
-   * — and emission per trigger is bounded by the gap being closed, so
-   * state and output both stay grid-sized at any stream length. This is
-   * the flatMapGroupsWithState shape (multi-row emission per key per
-   * trigger) the rest of the s-family doesn't exercise.
-   *
-   * Days ride as ISO `yyyy-MM-dd` STRINGS end to end (lexicographic
-   * order == day order; LocalDate arithmetic driver-free and
-   * timezone-free — a java.sql.Date detour would re-enter the JVM
-   * default-zone trap). On a BATCH input Spark runs the same function
-   * once per key with empty state — each user's full day set folds in
-   * one call (sorted in-task; bounded by the series horizon, the a13
-   * knob) — so the batch twin (catalog s15) and the streaming run share
-   * one code path, and a13's oracle gates both.
-   */
   /**
    * STREAMING capped co-occurrence membership (catalog s16 — the graph
    * family's live twin): per (event_type, hour) cell keep the `cap`
@@ -494,6 +456,27 @@ object EventStream {
   case object FailOnLate extends LatePolicy
   case object EmitLateMarked extends LatePolicy
 
+  /**
+   * STREAMING GAP-FILL (a13's stateful twin): per-user daily aggregates
+   * arrive over triggers; every emitted series row is APPEND-final —
+   * fills for the gap (last observed day, new day) carry the stored
+   * value with n_events = 0 / observed = false / their staleness, then
+   * the observed day emits and becomes the new state. The state is TWO
+   * fields per user (last day, last value) — constant, no retained rows
+   * — and emission per trigger is bounded by the gap being closed, so
+   * state and output both stay grid-sized at any stream length. This is
+   * the flatMapGroupsWithState shape (multi-row emission per key per
+   * trigger) the rest of the s-family doesn't exercise.
+   *
+   * Days ride as ISO `yyyy-MM-dd` STRINGS end to end (lexicographic
+   * order == day order; LocalDate arithmetic driver-free and
+   * timezone-free — a java.sql.Date detour would re-enter the JVM
+   * default-zone trap). On a BATCH input Spark runs the same function
+   * once per key with empty state — each user's full day set folds in
+   * one call (sorted in-task; bounded by the series horizon, the a13
+   * knob) — so the batch twin (catalog s15) and the streaming run share
+   * one code path, and a13's oracle gates both.
+   */
   def gapFillDaily(daily: DataFrame,
       onLate: LatePolicy = FailOnLate): DataFrame = {
     val spark = daily.sparkSession
@@ -657,17 +640,6 @@ object EventStream {
   }
 
   /**
-   * STREAMING COLLOCATION-DICTIONARY maintenance (catalog s17 — t16 as
-   * a stream builds it): each trigger's unigram and adjacent-bigram
-   * counts fold into overwrite-versioned parquet state (the s7
-   * histogram-fold discipline). Counts are associative, so ANY trigger
-   * slicing converges on the batch dictionary; fold cost tracks
-   * dictionary + batch, never the corpus; the token total N needs no
-   * separate state (N = Σ unigram counts at serve time). Builders are
-   * the SHARED Curate.unigramCounts/bigramCounts — the same code path
-   * the batch scorer runs, so the twins cannot drift.
-   */
-  /**
    * foreachBatch body of the STREAMING BPE DICTIONARY (catalog s21 —
    * t17's live twin): per trigger, the batch's alphabetic word counts
    * (the SAME [[graft.operators.Tokenizer.wordCounts]] the batch
@@ -676,22 +648,15 @@ object EventStream {
    * batch dictionary, and BPE training is a pure function of the
    * dictionary, so merges re-derived from the folded state equal the
    * batch-trained merges bit for bit (t17's oracle gates s21
-   * unchanged). The state is vocabulary-sized at any corpus volume;
-   * idempotent per-version overwrite (a trigger retry rewrites
-   * identical state — the collocFoldBatch discipline).
+   * unchanged). The state is vocabulary-sized at any corpus volume.
    */
   def bpeDictFoldBatch(statePath: String)(batch: DataFrame,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val cnt = graft.operators.Tokenizer.wordCounts(batch, "w")
-    val merged =
-      if (batchId == 0) cnt
-      else spark.read.schema("word STRING, cnt BIGINT")
-        .parquet(s"$statePath/dict_v$batchId")
-        .unionAll(cnt)
-        .groupBy("word").agg(sum(col("cnt")).as("cnt"))
-    merged.write.mode("overwrite").parquet(s"$statePath/dict_v${batchId + 1}")
-  }
+      batchId: Long): Unit =
+    bpeDictState.sumFold(statePath, batchId,
+      graft.operators.Tokenizer.wordCounts(batch, "w"), Seq("word"), Seq("cnt"))
+
+  /** s21's folded word-count dictionary. */
+  val bpeDictState = VersionedState("dict_v", "word STRING, cnt BIGINT")
 
   /** s22/p8's frontier state schemas (bucket = hash(curl) partition). */
   val frontierStateSchema: String =
@@ -801,7 +766,6 @@ object EventStream {
       markers: Seq[(String, Seq[String])], stops: Seq[String],
       minQuality: Double): Unit = {
     import graft.functions.{text => T}
-    import graft.sources.ManifestStore
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
 
@@ -876,15 +840,8 @@ object EventStream {
         concat(col("doc_id").cast("string"), lit("|p8b"))) * nBuckets).cast("long"))
       .select("doc_id", "first_seen", "last_seen", "curl", "domain",
         "n_tokens", "quality", "bucket")
-    val version = f"v$batchId%05d"
-    val versions = ManifestStore.listVersions(spark, corpusRoot)
-    if (versions.contains(version)) () // committed by a prior attempt
-    else if (versions.isEmpty)
-      ManifestStore.publishInitial(spark, delta, corpusRoot, version, "bucket")
-    else
-      ManifestStore.publishDelta(spark, delta, corpusRoot, versions.last,
-        version, "bucket", "doc_id",
-        Seq("curl", "domain", "n_tokens", "quality"), crawlCorpusSchema)
+    publishTrigger(corpusRoot, batchId, delta, "doc_id",
+      Seq("curl", "domain", "n_tokens", "quality"), crawlCorpusSchema)
   }
 
   /** s26's curated-store read contract (the batch corpus the admission
@@ -905,22 +862,24 @@ object EventStream {
    * (doc_id, domain, curl, t) through p7's exact three-gate funnel:
    *
    *   A. FRONTIER — within-slice first-fetch-wins (per-curl min
-   *      doc_id window), then anti-join against the overwrite-
-   *      versioned SEEN set (curls fetched by any prior trigger), then
-   *      anti-join against the curated store's canonical-url set.
+   *      doc_id window), then anti-join against the SEEN set (curls
+   *      fetched by any prior trigger; [[FrontierState]]'s bucket-delta
+   *      manifest chain), then anti-join against the curated store's
+   *      canonical-url set.
    *   B. NEAR-DUP — [[graft.operators.Dedup.crossDedupPresigned]]
    *      bands the trigger's fresh docs against the store's PERSISTED
-   *      band index (per-side caps, the l10 shape): per-trigger cost =
-   *      the slice's own signature build + the bucket join — the store
-   *      is never re-shingled (its minhashSignature table is written
-   *      once at store-build time and read back per trigger; store
-   *      text is touched only candidate-sized, inside verification),
-   *      and store↔store pairs never exist past the candidate join.
-   *      The slice side of every bucket is a
-   *      subset of the batch run's incoming side, so any bucket the
-   *      batch cap admits is admitted per-trigger too — at fixture
-   *      scale no bucket approaches the cap and the streamed verdicts
-   *      equal p7's batch verdicts doc for doc.
+   *      signatures (per-side caps, the l10 shape): the store is never
+   *      re-shingled (its minhashSignature table is written once at
+   *      store-build time), and store↔store pairs never exist past the
+   *      candidate join. The persisted table holds per-doc signatures,
+   *      not band keys, so every trigger still reads the WHOLE
+   *      `store_sig` table and re-bands it, and verification
+   *      (`Dedup.pairSides`) scans the store's full text before its
+   *      broadcast join keeps the candidates' rows. The slice side of
+   *      every bucket is a subset of the batch run's incoming side, so
+   *      any bucket the batch cap admits is admitted per-trigger too —
+   *      at fixture scale no bucket approaches the cap and the streamed
+   *      verdicts equal p7's batch verdicts doc for doc.
    *   C. QUALITY — t2's exact formula over the staged text.
    *
    * Each trigger then writes its per-domain funnel LEDGER row set
@@ -942,11 +901,11 @@ object EventStream {
    * reads, and the unseen frontier's, which the fold rewrites — come out
    * of the jobs that stage those two cuts ([[graft.util.Side.distinct]]),
    * so a trigger runs no bucket collect of its own. Ledgers are
-   * domain-sized; per-trigger dedup cost is slice-sized and no trigger
-   * re-reads the whole frontier. One read is
-   * still store-sized: the frontier's not-in-store anti-join scans the
-   * store's whole `curl` column every trigger (one column, never the
-   * text).
+   * domain-sized and no trigger re-reads the whole frontier. Three
+   * reads per trigger are still STORE-sized, not slice-sized: the
+   * not-in-store anti-join scans the store's whole `curl` column, the
+   * near-dup step reads and re-bands the whole `store_sig` table, and
+   * verification scans the store's full text.
    */
   def corpusAdmissionBatch(statePath: String, storePath: String,
       storeSigPath: String, shingleN: Int, k: Int, bands: Int,
@@ -1006,10 +965,10 @@ object EventStream {
       val fresh = stage(unseen.drop("bucket")
         .join(store.select("curl"), Seq("curl"), "left_anti"))
       // B. near-dup admission: the trigger slice banded against the
-      // store's PERSISTED band index (Dedup.minhashSignature, written
-      // once at store-build time) — per-trigger cost is the slice's
-      // own signature build + the bucket join; the store text is
-      // touched only candidate-sized, inside verification
+      // store's PERSISTED signatures (Dedup.minhashSignature, written
+      // once at store-build time). Store-sized per trigger: the whole
+      // signature table is read and re-banded, and verification scans
+      // the store's full text before keeping the candidates' rows
       val novel = Dedup.crossDedupPresigned(
         fresh.select(col("doc_id").as("id"), col("t"), col("domain")),
         store.select(col("doc_id").as("id"), col("t")),
@@ -1050,6 +1009,9 @@ object EventStream {
   val sessionStateSchema: String =
     "user_id BIGINT, session_start TIMESTAMP, last_ts TIMESTAMP, " +
       "n_events BIGINT, v DECIMAL(28,6)"
+  /** s25's open sessions and its folded watermark (the latest ts seen). */
+  val sessionState = VersionedState("state_v", sessionStateSchema)
+  val sessionWm = VersionedState("wm_v", "wm TIMESTAMP")
 
   /**
    * foreachBatch body of STREAMING SESSIONIZATION (catalog s25 — a6's
@@ -1083,31 +1045,23 @@ object EventStream {
     // at-or-after everything already folded; a violation would silently
     // mis-close sessions, so it throws instead (the s23 fence)
     val bounds = batch.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
+    def wmAt(v: Long) = sessionWm.read(spark, statePath, v).head().getTimestamp(0)
+    def writeWm(wm: Timestamp): Unit = sessionWm.write(spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(wm)), sessionWm.schema),
+      statePath, batchId + 1)
     if (bounds.isNullAt(0)) {
       // empty trigger: nothing closes, but the chain must stay
       // readable — roll an empty ledger file and carry state/wm forward
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(sessionStateSchema))
-      empty.write.mode("overwrite").parquet(s"$statePath/ledger_b$batchId")
-      val prevState =
-        if (batchId == 0) empty
-        else spark.read.schema(sessionStateSchema)
-          .parquet(s"$statePath/state_v$batchId")
-      prevState.write.mode("overwrite").parquet(s"$statePath/state_v${batchId + 1}")
-      val prevWm =
-        if (batchId == 0) java.sql.Timestamp.valueOf("1970-01-01 00:00:00")
-        else spark.read.schema("wm TIMESTAMP")
-          .parquet(s"$statePath/wm_v$batchId").head().getTimestamp(0)
-      spark.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(prevWm)),
-        org.apache.spark.sql.types.StructType.fromDDL("wm TIMESTAMP"))
-        .write.mode("overwrite").parquet(s"$statePath/wm_v${batchId + 1}")
+      // (ledger rows share the state's shape; version 0 is its empty frame)
+      sessionState.read(spark, statePath, 0)
+        .write.mode("overwrite").parquet(s"$statePath/ledger_b$batchId")
+      sessionState.write(sessionState.read(spark, statePath, batchId),
+        statePath, batchId + 1)
+      writeWm(if (batchId == 0) Timestamp.valueOf("1970-01-01 00:00:00") else wmAt(batchId))
       return
     }
     if (batchId > 0) {
-      val wm = spark.read.schema("wm TIMESTAMP")
-        .parquet(s"$statePath/wm_v$batchId").head().getTimestamp(0)
+      val wm = wmAt(batchId)
       require(!bounds.getTimestamp(0).before(wm),
         s"out-of-order trigger: slice starts ${bounds.getTimestamp(0)} " +
           s"before the folded watermark $wm — triggers must be ts-range slices")
@@ -1129,8 +1083,7 @@ object EventStream {
         (proj(marked.filter(col("__idx") < col("__cnt"))),
           proj(marked.filter(col("__idx") === col("__cnt"))))
       else {
-        val st = spark.read.schema(sessionStateSchema)
-          .parquet(s"$statePath/state_v$batchId")
+        val st = sessionState.read(spark, statePath, batchId)
         val first = marked.filter(col("__idx") === 1)
           .select(col("user_id"), col("session_start").as("f_start"),
             col("last_ts").as("f_last"), col("n_events").as("f_n"),
@@ -1169,11 +1122,8 @@ object EventStream {
             .unionByName(carriedForward))
       }
     closed.write.mode("overwrite").parquet(s"$statePath/ledger_b$batchId")
-    opened.write.mode("overwrite").parquet(s"$statePath/state_v${batchId + 1}")
-    val newWm = spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(bounds.getTimestamp(1))),
-      org.apache.spark.sql.types.StructType.fromDDL("wm TIMESTAMP"))
-    newWm.write.mode("overwrite").parquet(s"$statePath/wm_v${batchId + 1}")
+    sessionState.write(opened, statePath, batchId + 1)
+    writeWm(bounds.getTimestamp(1))
   }
 
   /**
@@ -1203,13 +1153,7 @@ object EventStream {
       .select(col("user_id").cast("long").as("user_id"),
         to_date(col("ts")).as("day"))
       .distinct()
-    val prev =
-      if (batchId == 0)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id BIGINT, last_day DATE"))
-      else spark.read.schema("user_id BIGINT, last_day DATE")
-        .parquet(s"$statePath/state_v$batchId")
+    val prev = growthState.read(spark, statePath, batchId)
     val inSlice = Window.partitionBy("user_id").orderBy("day")
     val lagged = acts
       .withColumn("sday", lag(col("day"), 1).over(inSlice))
@@ -1220,34 +1164,32 @@ object EventStream {
         count(when(col("pday").isNull, 1)).as("n_new"),
         count(when(datediff(col("day"), col("pday")) === 1, 1)).as("n_retained"),
         count(when(datediff(col("day"), col("pday")) > 1, 1)).as("n_resurrected"))
-    val ledgerSchema = "day DATE, n_active BIGINT, n_new BIGINT, " +
-      "n_retained BIGINT, n_resurrected BIGINT"
-    val ledger =
-      if (batchId == 0) daily
-      else {
-        val old = spark.read.schema(ledgerSchema)
-          .parquet(s"$statePath/ledger_v$batchId")
-        // day-aligned-trigger fence: the append-without-reaggregation
-        // contract holds only if no calendar day straddles two triggers.
-        // Both scalars are tiny (ledger is day-sized, acts user-day-
-        // sized); a violated fence throws LOUDLY instead of writing a
-        // duplicate day row that double-counts n_active downstream.
-        val ledgerMax = old.agg(max(col("day"))).first().getDate(0)
-        val batchMin = acts.agg(min(col("day"))).first().getDate(0)
-        if (ledgerMax != null && batchMin != null &&
-            !batchMin.after(ledgerMax))
-          throw new IllegalStateException(
-            s"growth fold requires day-aligned triggers: batch $batchId " +
-              s"starts at $batchMin but the ledger already holds $ledgerMax — " +
-              "a straddled day would double-count n_active")
-        old.unionAll(daily)
-      }
-    ledger.write.mode("overwrite").parquet(s"$statePath/ledger_v${batchId + 1}")
-    val state = prev.select(col("user_id"), col("last_day").as("day"))
+    growthLedger.fold(statePath, batchId, daily) { (old, days) =>
+      // day-aligned-trigger fence: the append-without-reaggregation
+      // contract holds only if no calendar day straddles two triggers.
+      // Both scalars are tiny (ledger is day-sized, acts user-day-
+      // sized); a violated fence throws LOUDLY instead of writing a
+      // duplicate day row that double-counts n_active downstream.
+      val ledgerMax = old.agg(max(col("day"))).first().getDate(0)
+      val batchMin = acts.agg(min(col("day"))).first().getDate(0)
+      if (ledgerMax != null && batchMin != null &&
+          !batchMin.after(ledgerMax))
+        throw new IllegalStateException(
+          s"growth fold requires day-aligned triggers: batch $batchId " +
+            s"starts at $batchMin but the ledger already holds $ledgerMax — " +
+            "a straddled day would double-count n_active")
+      old.unionAll(days)
+    }
+    growthState.write(prev.select(col("user_id"), col("last_day").as("day"))
       .unionAll(acts)
-      .groupBy("user_id").agg(max(col("day")).as("last_day"))
-    state.write.mode("overwrite").parquet(s"$statePath/state_v${batchId + 1}")
+      .groupBy("user_id").agg(max(col("day")).as("last_day")),
+      statePath, batchId + 1)
   }
+
+  /** s23's per-user frontier (last active day) and its per-day ledger. */
+  val growthState = VersionedState("state_v", "user_id BIGINT, last_day DATE")
+  val growthLedger = VersionedState("ledger_v", "day DATE, n_active BIGINT, " +
+    "n_new BIGINT, n_retained BIGINT, n_resurrected BIGINT")
 
   /**
    * foreachBatch body of the STREAMING CORRELATION MONITOR (catalog s24
@@ -1264,38 +1206,39 @@ object EventStream {
    */
   def correlationFoldBatch(statePath: String, colNames: Seq[String],
       dec: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val cur = graft.operators.Profile.correlationMoments(batch, colNames, dec)
-    val merged =
-      if (batchId == 0) cur
-      else {
-        val prev = spark.read.schema(cur.schema)
-          .parquet(s"$statePath/mom_v$batchId")
-        val sums = cur.schema.fieldNames.filter(_ != "n").map(c =>
-          sum(col(c)).cast("decimal(38,8)").as(c))
-        prev.unionByName(cur).groupBy()
-          .agg(sum(col("n")).as("n"), sums.toIndexedSeq: _*)
-      }
-    merged.write.mode("overwrite").parquet(s"$statePath/mom_v${batchId + 1}")
+    correlationState(cur.schema).fold(statePath, batchId, cur) { (prev, moments) =>
+      val sums = moments.schema.fieldNames.filter(_ != "n").map(c =>
+        sum(col(c)).cast("decimal(38,8)").as(c))
+      prev.unionByName(moments).groupBy()
+        .agg(sum(col("n")).as("n"), sums.toIndexedSeq: _*)
+    }
   }
 
+  /** s24's single moment row, whose schema depends on the columns. */
+  def correlationState(schema: StructType): VersionedState = VersionedState("mom_v", schema)
+
+  /**
+   * STREAMING COLLOCATION-DICTIONARY maintenance (catalog s17 — t16 as
+   * a stream builds it): each trigger's unigram and adjacent-bigram
+   * counts fold into overwrite-versioned parquet state (the s7
+   * histogram-fold discipline). Counts are associative, so ANY trigger
+   * slicing converges on the batch dictionary; fold cost tracks
+   * dictionary + batch, never the corpus; the token total N needs no
+   * separate state (N = Σ unigram counts at serve time). Builders are
+   * the SHARED Curate.unigramCounts/bigramCounts — the same code path
+   * the batch scorer runs, so the twins cannot drift.
+   */
   def collocFoldBatch(statePath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val uni = graft.operators.Curate.unigramCounts(batch, "ws")
-    val bi = graft.operators.Curate.bigramCounts(batch, "ws")
-    def fold(df: DataFrame, tag: String, schema: String, keys: Seq[String],
-        cnt: String): Unit = {
-      val merged =
-        if (batchId == 0) df
-        else spark.read.schema(schema).parquet(s"$statePath/${tag}_v$batchId")
-          .unionAll(df)
-          .groupBy(keys.map(col): _*)
-          .agg(sum(col(cnt)).as(cnt))
-      merged.write.mode("overwrite").parquet(s"$statePath/${tag}_v${batchId + 1}")
-    }
-    fold(uni, "uni", "w STRING, c1 BIGINT", Seq("w"), "c1")
-    fold(bi, "bi", "w1 STRING, w2 STRING, n_xy BIGINT", Seq("w1", "w2"), "n_xy")
+    collocUniState.sumFold(statePath, batchId,
+      graft.operators.Curate.unigramCounts(batch, "ws"), Seq("w"), Seq("c1"))
+    collocBiState.sumFold(statePath, batchId,
+      graft.operators.Curate.bigramCounts(batch, "ws"), Seq("w1", "w2"), Seq("n_xy"))
   }
+
+  /** s17's folded unigram and adjacent-bigram counts. */
+  val collocUniState = VersionedState("uni_v", "w STRING, c1 BIGINT")
+  val collocBiState = VersionedState("bi_v", "w1 STRING, w2 STRING, n_xy BIGINT")
 
   /**
    * foreachBatch body of the STREAMING data-quality monitor (catalog
@@ -1314,49 +1257,32 @@ object EventStream {
    *    or accept sketched approximations; here it is exact.
    * [[qualityServe]] assembles the q1-shaped summary from the two
    * states. The FK parent is read per trigger (a dim — broadcast-sized
-   * by assumption, same as the batch check). Idempotent per-version
-   * overwrite: a trigger retry rewrites identical state.
+   * by assumption, same as the batch check).
    */
   def qualityFoldBatch(unique: Seq[String], notNull: Seq[String],
       acceptedValues: Seq[(String, Seq[String])],
       relationships: Seq[(String, DataFrame, String)],
       statePath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val scalarNew = graft.operators.Checks.violations(
-      batch, unique = Nil, notNull = notNull,
-      acceptedValues = acceptedValues, relationships = relationships)
-    val scalar =
-      if (batchId == 0) scalarNew
-      else spark.read.schema(qualityScalarSchema)
-        .parquet(s"$statePath/scalar_v$batchId")
-        .unionAll(scalarNew)
-        .groupBy("check_name", "column_name")
-        .agg(sum(col("n_violations")).as("n_violations"))
-    scalar.write.mode("overwrite").parquet(s"$statePath/scalar_v${batchId + 1}")
+    qualityScalarState.sumFold(statePath, batchId, graft.operators.Checks.violations(
+        batch, unique = Nil, notNull = notNull,
+        acceptedValues = acceptedValues, relationships = relationships),
+      Seq("check_name", "column_name"), Seq("n_violations"))
     val keysNew = unique.map(c =>
       batch.filter(col(c).isNotNull)
         .groupBy(col(c).cast("string").as("key"))
         .agg(count(lit(1)).as("cnt"))
         .select(lit(c).as("column_name"), col("key"), col("cnt")))
       .reduce(_.unionAll(_))
-    val keys =
-      if (batchId == 0) keysNew
-      else spark.read.schema(qualityKeysSchema)
-        .parquet(s"$statePath/keys_v$batchId")
-        .unionAll(keysNew)
-        .groupBy("column_name", "key")
-        .agg(sum(col("cnt")).as("cnt"))
-    keys.write.mode("overwrite").parquet(s"$statePath/keys_v${batchId + 1}")
+    qualityKeysState.sumFold(statePath, batchId, keysNew,
+      Seq("column_name", "key"), Seq("cnt"))
   }
 
   /** Assemble the q1-shaped (check_name, column_name, n_violations)
     * summary from [[qualityFoldBatch]]'s state at `version`. */
   def qualityServe(spark: org.apache.spark.sql.SparkSession,
       statePath: String, version: Long, unique: Seq[String]): DataFrame = {
-    val scalar = spark.read.schema(qualityScalarSchema)
-      .parquet(s"$statePath/scalar_v$version")
-    val keys = spark.read.schema(qualityKeysSchema)
-      .parquet(s"$statePath/keys_v$version")
+    val scalar = qualityScalarState.read(spark, statePath, version)
+    val keys = qualityKeysState.read(spark, statePath, version)
     val uniques = unique.map(c =>
       keys.filter(col("column_name") === c && col("cnt") > 1)
         .agg(count(lit(1)).as("n_violations"))
@@ -1369,25 +1295,44 @@ object EventStream {
   val qualityScalarSchema =
     "check_name STRING, column_name STRING, n_violations BIGINT"
   val qualityKeysSchema = "column_name STRING, key STRING, cnt BIGINT"
+  /** s20's per-check violation counts and its per-key counts. */
+  val qualityScalarState = VersionedState("scalar_v", qualityScalarSchema)
+  val qualityKeysState = VersionedState("keys_v", qualityKeysSchema)
 
+  /**
+   * foreachBatch body of the STREAMING drift monitor (catalog
+   * s7_stream_drift — q3's live twin): each trigger's rows are binned
+   * into (group, _bin, _cb) histogram cells
+   * (graft.operators.Checks.histogram) and folded into a VERSIONED
+   * cumulative histogram — `statePath/v{batchId+1}` is written by
+   * reading `v{batchId}` and summing the trigger's cells in
+   * (mergeStateVersion's write-new-then-swap discipline: a reader never
+   * sees a half-folded state, the previous version stays queryable).
+   *
+   * Scale + delivery notes: the state is the CONTRACTED relation —
+   * groups × bins rows, not events — so each fold is a tiny aggregate
+   * regardless of trigger volume; and because v{batchId+1} is written by
+   * deterministic OVERWRITE from v{batchId} + the batch, a foreachBatch
+   * RETRY of the same batchId rewrites the identical version — the fold
+   * is idempotent, giving effectively-once state without a transaction
+   * log. Histogram merge is associative/commutative, so any trigger
+   * slicing of the stream folds to the same final state (the catalog
+   * twin proves three time slices == q3's one-shot scan, bit-for-bit).
+   */
   def histogramFoldBatch(groupCol: String, valueCol: String, binWidth: Double,
-      stateSchema: String, statePath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val cells = graft.operators.Checks.histogram(
-      batch, groupCol, valueCol, binWidth, "_cb")
-    val folded =
-      if (batchId == 0) cells
-      else spark.read.schema(stateSchema).parquet(s"$statePath/v$batchId")
-        .unionAll(cells)
-        .groupBy(col(groupCol), col("_bin"))
-        .agg(sum(col("_cb")).as("_cb"))
-    folded.write.mode("overwrite").parquet(s"$statePath/v${batchId + 1}")
-  }
+      stateSchema: String, statePath: String)(batch: DataFrame, batchId: Long): Unit =
+    histogramState(stateSchema).sumFold(statePath, batchId,
+      graft.operators.Checks.histogram(batch, groupCol, valueCol, binWidth, "_cb"),
+      Seq(groupCol, "_bin"), Seq("_cb"))
+
+  /** s7's cumulative histogram cells, under the caller's cell schema. */
+  def histogramState(schema: String): VersionedState = VersionedState("v", schema)
 
   /** s27's daily-count state schema (day keeps its timestamp type so
     * the serve-time window orders it natively). */
   val volumeStateSchema: String =
     "event_type STRING, day TIMESTAMP, n_events BIGINT"
+  val volumeState = VersionedState("daily_v", volumeStateSchema)
 
   /**
    * foreachBatch body of STREAMING VOLUME MONITORING (catalog s27 —
@@ -1412,18 +1357,10 @@ object EventStream {
    * never touches event bytes.
    */
   def volumeFoldBatch(statePath: String)(batch: DataFrame,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val part = graft.operators.Checks.dailyCounts(batch, "event_type", "ts")
-    val folded =
-      if (batchId == 0) part
-      else spark.read.schema(volumeStateSchema)
-        .parquet(s"$statePath/daily_v$batchId")
-        .unionByName(part)
-        .groupBy("event_type", "day")
-        .agg(sum(col("n_events")).as("n_events"))
-    folded.write.mode("overwrite").parquet(s"$statePath/daily_v${batchId + 1}")
-  }
+      batchId: Long): Unit =
+    volumeState.sumFold(statePath, batchId,
+      graft.operators.Checks.dailyCounts(batch, "event_type", "ts"),
+      Seq("event_type", "day"), Seq("n_events"))
 
   /** s28's labeled-feature state schema (c14's qualityFeatures row +
     * its fixed-point label). */

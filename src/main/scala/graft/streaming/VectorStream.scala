@@ -53,28 +53,18 @@ object VectorStream {
    * batch monitor's fused scan reduces to) and fold into an
    * overwrite-versioned parquet state at `statePath/v{batchId+1}`.
    * Decimal sums and counts are associative and exact, so any trigger
-   * slicing converges on the one-shot cells bit for bit, and a trigger
-   * RETRY rewrites the identical version (idempotent fold, no
-   * transaction log needed). State is dim rows regardless of trigger
+   * slicing converges on the one-shot cells bit for bit (a
+   * [[VersionedState]] fold). State is dim rows regardless of trigger
    * volume — the fold is metadata-sized at any corpus scale.
    */
   def embeddingCellsFoldBatch(statePath: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val cells = graft.operators.Checks.embeddingCells(
-      batch, "embedding", "_sc", "n_cur")
-    val folded =
-      if (batchId == 0) cells
-      else spark.read.schema(cellsStateSchema).parquet(s"$statePath/v$batchId")
-        .unionAll(cells)
-        .groupBy(col("dim"))
-        .agg(sum(col("_sc")).as("_sc"), sum(col("n_cur")).as("n_cur"))
-    folded.write.mode("overwrite").parquet(s"$statePath/v${batchId + 1}")
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    cellsState.sumFold(statePath, batchId, graft.operators.Checks.embeddingCells(
+      batch, "embedding", "_sc", "n_cur"), Seq("dim"), Seq("_sc", "n_cur"))
 
   /** Schema of the folded drift state — decimal sums stay decimal on
     * disk (parquet DECIMAL(38,20)); re-inferring as double would forfeit
     * the exact-fold guarantee. */
   val cellsStateSchema = "dim INT, _sc DECIMAL(38,20), n_cur BIGINT"
+  val cellsState = VersionedState("v", cellsStateSchema)
 }

@@ -2,6 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.Sessions
 
 /**
@@ -14,9 +19,10 @@ import graft.Sessions
  *
  * Env: SPARK_GRAFT_SF_DIR (default sf0.1 — the bench scale, so plan
  * shapes match what the bench measures), SPARK_GRAFT_CPUS (default 32).
- * Entries that run eager driver-side work during construction (iterative
- * loops, store writes) execute that work here; the dumped plan is the
- * RETURNED frame's, same scope as ExplainAudit.
+ * Entries that run eager work during construction (loops, store writes,
+ * trigger bodies) execute it here. The file holds the RETURNED frame's
+ * formatted plan, then `== <action>` and the optimized logical plan of
+ * every action `run` executed, in order.
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,13 +32,35 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
     Files.createDirectories(Paths.get(outDir))
+    val markerDir = Files.createTempDirectory("plandump").toString
     names.foreach { name =>
-      val df = graft.queries.Catalog.byName(name).run(spark, d)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
-        txt.getBytes("UTF-8"))
-      println(s"[plandump] wrote $outDir/${name}_$suffix.txt (${txt.length} chars)")
+      // every action `run` executes, in order; the listener bus is
+      // asynchronous, so a marker write flushes it
+      val actions = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+          actions.add(s"== $funcName\n" + scala.util.Try(qe.optimizedPlan.treeString)
+            .getOrElse("<no optimized plan>\n"))
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+          onSuccess(s"$funcName (failed)", qe, 0L)
+      }
+      spark.listenerManager.register(listener)
+      val marker = s"$markerDir/$name"
+      val df =
+        try {
+          val df = graft.queries.Catalog.byName(name).run(spark, d)
+          spark.range(1).write.mode("overwrite").parquet(marker)
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!actions.asScala.exists(_.contains(marker)) &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+          require(actions.asScala.exists(_.contains(marker)), s"$name: listener bus not flushed")
+          df
+        } finally spark.listenerManager.unregister(listener)
+      val plans = actions.asScala.takeWhile(!_.contains(marker)).toSeq
+      val txt = (df.queryExecution.explainString(FormattedMode) +: plans).mkString("\n")
+      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), txt.getBytes("UTF-8"))
+      println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
+        s"(${plans.size} actions, ${txt.length} chars)")
       Sessions.reap(spark)
     }
     spark.stop()

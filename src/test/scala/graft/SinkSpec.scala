@@ -168,6 +168,30 @@ class SinkSpec extends AnyFunSuite {
     assert(basenames(purged, 1L) != pre1)
   }
 
+  test("carry-forward renames on the store path's own filesystem, not the default one") {
+    val dir = "file:" + Files.createTempDirectory("sink-carry").toString
+    val schema = "id BIGINT, v DOUBLE, bucket BIGINT"
+    val store = s"$dir/store"
+    Sink.writePartitioned(spark.range(0, 40).selectExpr("id", "id % 4 AS bucket",
+      "CAST(id AS DOUBLE) AS v"), store, Seq("bucket"))
+    val storeDf = spark.read.schema(schema).parquet(store)
+    val tombstones = spark.range(0, 40).selectExpr("id", "id % 4 AS bucket")
+      .filter(col("id") === 5L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prevDefault = conf.get("fs.defaultFS")
+    // a default filesystem no store lives on: any lookup through it fails
+    conf.set("fs.defaultFS", "nofs:///")
+    try {
+      Sink.purgeTombstones(spark, storeDf, store, s"$dir/purged", "bucket", "id", tombstones)
+      val withPos = Sink.readWithPosition(spark, schema, s"$dir/purged")
+      Sink.foldDeletionVectors(spark, schema, s"$dir/purged", s"$dir/folded", "bucket",
+        withPos.filter(col("id") === 6L).select(col("__file"), col("__pos"), col("bucket")))
+    } finally conf.set("fs.defaultFS", prevDefault)
+    val back = spark.read.schema(schema).parquet(s"$dir/folded")
+      .collect().map(_.getLong(0)).toSet
+    assert(back == (0L until 40L).toSet -- Set(5L, 6L))
+  }
+
   test("deletion vectors delete by POSITION, not key: one of two equal-key rows survives") {
     val dir = Files.createTempDirectory("sink-dv").toString
     val store = s"$dir/store"

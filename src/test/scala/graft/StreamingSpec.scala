@@ -1512,6 +1512,42 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("versioned fold state: version 0 is empty; a replayed trigger rewrites the identical version") {
+    val root = java.nio.file.Files.createTempDirectory("replay").toString
+    val (vol, gr) = (s"$root/vol", s"$root/gr")
+    def day(d: Int) = java.sql.Timestamp.valueOf(f"2024-03-$d%02d 10:00:00")
+    // day-aligned triggers, as growth's fence requires
+    val triggers = Seq(
+      Seq((1L, "click", day(1)), (2L, "view", day(1)), (1L, "click", day(2))),
+      Seq((1L, "click", day(3)), (3L, "view", day(4)), (3L, "view", day(4))),
+      Seq((2L, "click", day(5)), (3L, "click", day(6))))
+    def run(i: Int): Unit = {
+      val batch = triggers(i).toDF("user_id", "event_type", "ts")
+      EventStream.volumeFoldBatch(vol)(batch, i.toLong)
+      EventStream.growthFoldBatch(gr)(batch, i.toLong)
+    }
+    val states = Seq(EventStream.volumeState -> vol,
+      EventStream.growthState -> gr, EventStream.growthLedger -> gr)
+    def rows(v: Long) = states.map { case (st, dir) =>
+      st.read(spark, dir, v).collect().map(_.toString).sorted.toSeq }
+    def files(v: Long) = states.map { case (st, dir) =>
+      new java.io.File(new java.net.URI("file://" + st.path(dir, v)))
+        .listFiles().map(f => f.getName -> f.lastModified()).toSet }
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    assert(rows(0).forall(_.isEmpty), "version 0 is the empty frame")
+    (0 until 3).foreach(run)
+    states.foreach { case (st, dir) =>
+      assert(shape(st.read(spark, dir, 0)) == shape(spark.read.parquet(st.path(dir, 1))),
+        s"${st.prefix}: version 0 must carry the written versions' schema")
+    }
+    val (v2, v3, v3files) = (rows(2), rows(3), files(3))
+    assert(v2.forall(_.nonEmpty) && v3.forall(_.nonEmpty))
+    run(1) // replay: growth's day fence must not throw
+    assert(rows(2) == v2, "the replayed trigger must rewrite the identical version")
+    assert(rows(3) == v3 && files(3) == v3files, "a later version must stay untouched")
+  }
+
   test("streaming volume monitor: non-day-aligned fold == batch verdict; outage flagged") {
     import graft.operators.Checks
     implicit val ctx = spark.sqlContext
